@@ -20,7 +20,7 @@ Layout:
     corpus.py     deterministic synthetic transcript corpus (seeded)
     oracle.py     pure numpy BM25 oracle — the rank-identity ground truth
     codec.py      delta+varint posting-block codec + block-max metadata
-    operators/    docid assignment, index build, merge, WAND scorer, dedup...
+    operators/    docid assignment, index build, merge, BM25 scorer, dedup...
     sources/      parquet/Iceberg-backed index store with snapshots+lineage
     functions/    BM25 score expressions, text analysis, similarity
 """

@@ -19,10 +19,11 @@ index designs; SURVEY.md §7 M2):
     n_docs        int32   postings in this block
     doc_ids_delta binary  varint stream: [doc0 - first_doc(=0), gaps...]
     tfs           binary  varint stream of term frequencies
-    block_max_tf  int32
-    block_max_score double  exact max of the BM25 term score over the block
-                            (computed at build with true dl/avgdl/idf →
-                            a *safe and tight* WAND upper bound)
+    block_max_tf  int32   max tf in the block
+    block_min_dl  int32   min dl in the block
+    block_max_raw double  exact max of the idf-free BM25 term score over the
+                          block at the encode-time avgdl (kept for
+                          block-level pruning; the scorer reads none of these)
 
 Round-trip identity is property-tested in tests/test_codec.py, the analogue
 of the reference's codec round-trip test (/root/reference/index_test.go:44-76).
@@ -247,29 +248,6 @@ def encode_runs(
         "block_max_raw": np.maximum.reduceat(raw, block_starts),
         "cf_block": np.add.reduceat(t, block_starts),
     }
-
-
-def block_upper_bound(
-    max_tf: np.ndarray,
-    min_dl: np.ndarray,
-    avgdl: float,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> np.ndarray:
-    """Safe idf-free block score bound for the CURRENT avgdl.
-
-    The per-posting score is increasing in tf and decreasing in dl, so
-    raw(max_tf, min_dl, avgdl) ≥ raw(tf_i, dl_i, avgdl) for every posting
-    in the block — for ANY avgdl.  ``block_max_raw`` (the exact max at
-    encode time) is only a valid bound for the avgdl it was encoded with;
-    in an incremental index avgdl drifts as documents arrive, and pruning
-    against a stale bound is UNSAFE (found as a real rank error in the
-    streaming-ingest tests).  Query-time pruning therefore always derives
-    its bound from (block_max_tf, block_min_dl) with the live avgdl.
-    """
-    t = np.asarray(max_tf, dtype=np.float64)
-    dl = np.asarray(min_dl, dtype=np.float64)
-    return t * (k1 + 1.0) / (t + k1 * (1.0 - b + b * dl / avgdl))
 
 
 def decode_block(row) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

@@ -3,12 +3,12 @@ persisted inverted index.
 
 The reference engine scores every query as a disjunctive vector match
 (/root/reference/index.go:52-86); a fulltext engine also needs filtered
-retrieval — "all of these, none of those, rank by relevance".  The
-Spark-first construction keeps the exact plan shape of
-:meth:`wand.IndexReader.batch_search`: one partition-pruned,
-term-pushed posting scan covering every clause's terms, ONE exchange
-sized to the true doc-bucket count, then a per-bucket Arrow kernel that
-does candidate algebra and scoring as numpy set/array ops:
+retrieval — "all of these, none of those, rank by relevance".  Scoring
+runs through the same plan and the same per-bucket kernel as
+:meth:`wand.IndexReader.batch_search` (``wand._topk_plan`` /
+``wand.clause_topk``): one partition-pruned, term-pushed posting scan
+covering every clause's terms, ONE exchange sized to the true doc-bucket
+count, then candidate algebra and scoring as numpy set/array ops:
 
 - **MUST** — per-bucket sorted-array intersection of the must terms'
   posting lists (a doc lives in exactly one bucket, so bucket-local
@@ -21,7 +21,7 @@ does candidate algebra and scoring as numpy set/array ops:
 - **Scoring** — BM25 summed over the distinct (must ∪ should) terms a
   candidate contains, accumulated per term in ascending term order into
   a float64 array indexed by candidate position (bit-identical summation
-  order to wand.dense_topk and the DuckDB oracle).
+  order to the DuckDB oracle).
 
 OOV semantics mirror the reference's guard style (index.go:54-56): an
 OOV must term → 0 rows (nothing can match); OOV should / must_not terms
@@ -35,33 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import codec
 from ..analyzer import tokenize
-from ..functions.bm25 import B, K1
-from .wand import tombstones_ref
-
-_EMPTY_SCHEMA = "doc_id bigint, score double"
-
-
-def _decode_term(group: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Concat-decode one term's blocks within a bucket group →
-    (doc_ids, tfs, dls), doc_ids sorted ascending.
-
-    Blocks ARE doc-ordered within a segment (indexer.finalize), but
-    applyInPandas group rows carry no order guarantee — the explicit
-    first_doc sort below is what makes the documented sorted-output
-    invariant true (wand.TermCursor sorts for the same reason)."""
-    group = group.sort_values("first_doc")
-    ids, tfs, dls = [], [], []
-    for ids_b, tfs_b, dls_b, n, first in zip(
-        group["doc_ids_delta"], group["tfs"], group["dls"],
-        group["n_docs"], group["first_doc"],
-    ):
-        n = int(n)
-        ids.append(codec.decode_doc_ids(ids_b, int(first), n))
-        tfs.append(codec.decode_tfs(tfs_b, n))
-        dls.append(codec.decode_dls(dls_b, n))
-    return np.concatenate(ids), np.concatenate(tfs), np.concatenate(dls)
+from .wand import _topk_plan, decode_term, tombstones_ref
 
 
 def matching_doc_ids(reader, terms: list[str], mode: str = "all") -> DataFrame | None:
@@ -87,9 +62,7 @@ def matching_doc_ids(reader, terms: list[str], mode: str = "all") -> DataFrame |
 
     def combine(pdf: pd.DataFrame) -> pd.DataFrame:
         deleted = deleted_bc.value if deleted_bc is not None else deleted_small
-        per_term = [
-            _decode_term(g)[0] for _, g in pdf.groupby("term")
-        ]
+        per_term = [decode_term(g)[0] for _, g in pdf.groupby("term")]
         if conj:
             if len(per_term) < n_terms:
                 acc = np.empty(0, dtype=np.int64)
@@ -111,80 +84,7 @@ def matching_doc_ids(reader, terms: list[str], mode: str = "all") -> DataFrame |
             }
         )
 
-    n_buckets = -(-int(reader.stats["n_docs"]) // int(reader.stats["doc_bucket_size"]))
-    n_part = max(1, min(reader.spark.sparkContext.defaultParallelism, n_buckets))
-    return (
-        blocks.repartition(n_part, "doc_bucket")
-        .groupBy("doc_bucket")
-        .applyInPandas(combine, schema="doc_bucket int, doc_id long")
-    )
-
-
-def _clause_topk(
-    by_term: dict,
-    must_live: list[str],
-    should_live: list[str],
-    mnot_live: list[str],
-    idf_b: dict[str, float],
-    avgdl: float,
-    k: int,
-    deleted: frozenset | None,
-) -> tuple[np.ndarray, np.ndarray] | None:
-    """Per-bucket candidate algebra + BM25 for ONE clause set over the
-    bucket's decoded terms (``by_term``: term → (doc_ids, tfs, dls), each
-    sorted unique by doc_id).  Returns (doc_ids, scores) of the local
-    top-k, or None when the clause matches nothing in this bucket."""
-    if must_live:
-        musts = [by_term[t][0] for t in must_live if t in by_term]
-        if len(musts) < len(must_live):
-            return None
-        musts.sort(key=len)
-        cand = musts[0]
-        for ids in musts[1:]:
-            cand = np.intersect1d(cand, ids, assume_unique=True)
-            if cand.shape[0] == 0:
-                break
-    else:
-        unions = [by_term[t][0] for t in should_live if t in by_term]
-        if not unions:
-            return None
-        cand = np.unique(np.concatenate(unions))
-    if cand.shape[0] and mnot_live:
-        excl = [by_term[t][0] for t in mnot_live if t in by_term]
-        if excl:
-            cand = cand[~np.isin(cand, np.concatenate(excl), assume_unique=False)]
-    if deleted and cand.shape[0]:
-        cand = cand[~np.isin(cand, np.fromiter(deleted, dtype=np.int64))]
-    if cand.shape[0] == 0:
-        return None
-    # BM25 over scoring terms, ascending term order, accumulated by
-    # candidate position (cand and each posting list are sorted unique)
-    scoring = sorted(set(must_live) | set(should_live))
-    scores = np.zeros(cand.shape[0], dtype=np.float64)
-    for term in scoring:
-        got = by_term.get(term)
-        if got is None:
-            continue
-        docs, tf_i, dl_i = got
-        pos = np.searchsorted(cand, docs)
-        pos_c = np.minimum(pos, cand.shape[0] - 1)
-        mask = cand[pos_c] == docs
-        if not mask.any():
-            continue
-        tf = tf_i[mask].astype(np.float64)
-        dl = dl_i[mask].astype(np.float64)
-        idf = idf_b[term]
-        contrib = idf * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
-        scores[pos_c[mask]] += contrib
-    keep = np.flatnonzero(scores > 0.0)
-    if keep.shape[0] == 0:
-        return None
-    if keep.shape[0] > k:
-        kth = -np.partition(-scores[keep], k - 1)[k - 1]
-        keep = keep[scores[keep] >= kth]
-    order = np.lexsort((cand[keep], -scores[keep]))[:k]
-    chosen = keep[order]
-    return cand[chosen], scores[chosen]
+    return reader.map_buckets(blocks, combine, "doc_bucket int, doc_id long")
 
 
 def boolean_batch(
@@ -195,83 +95,22 @@ def boolean_batch(
     """Batched filtered retrieval: ``clauses`` =
     [(query_id, must, should, must_not)] → (query_id, rank, doc_id, score).
 
-    Serving is batched (BENCH.md): the batch shares ONE partition-pruned,
-    term-pushed posting scan over the union of every clause's terms and
-    ONE exchange sized to the true bucket count; per bucket each term
-    decodes ONCE for the whole batch (head terms typically appear in many
-    clauses), then the clause algebra loops queries — the exact shape of
-    wand.batch_search.  Per-query semantics are unchanged from
+    Serving is batched (BENCH.md): the batch runs through the one
+    scoring plan of wand.batch_search (``wand._topk_plan``) — ONE
+    partition-pruned, term-pushed posting scan over the union of every
+    clause's terms, ONE exchange sized to the true bucket count, each
+    term decoded ONCE per bucket for the whole batch, then the clause
+    algebra per query, then the hierarchical exact top-k
+    (wand.ranked_topk).  Per-query semantics are unchanged from
     boolean_search: an OOV must term, or no live (must ∪ should) term,
-    yields 0 rows for that query only.  The final merge is the
-    hierarchical exact top-k (wand.ranked_topk).
+    yields 0 rows for that query only.
     """
-    from .wand import ranked_topk
-
-    spark = reader.spark
-    empty = "query_id string, rank int, doc_id bigint, score double"
-    if k <= 0 or not clauses:
-        return spark.createDataFrame([], empty)
-    parsed: dict[str, tuple[list[str], list[str], list[str]]] = {}
+    specs: dict[str, tuple[list[str], list[str], list[str]]] = {}
     for qid, must, should, must_not in clauses:
         must_t = sorted(set(tokenize(must)))
-        should_t = sorted(set(tokenize(should)))
         mnot_t = sorted(set(tokenize(must_not)) - set(must_t))
-        if must_t or should_t:
-            parsed[qid] = (must_t, should_t, mnot_t)
-    if not parsed:
-        return spark.createDataFrame([], empty)
-
-    all_terms = sorted({t for c in parsed.values() for part in c for t in part})
-    dict_rows = reader._dictionary_rows(all_terms)
-    specs: dict[str, tuple[list[str], list[str], list[str]]] = {}
-    needed: set[str] = set()
-    for qid, (must_t, should_t, mnot_t) in parsed.items():
-        if any(t not in dict_rows for t in must_t):
-            continue  # OOV must term → this query matches nothing
-        should_live = [t for t in should_t if t in dict_rows]
-        mnot_live = [t for t in mnot_t if t in dict_rows]
-        if not must_t and not should_live:
-            continue
-        specs[qid] = (must_t, should_live, mnot_live)
-        needed.update(must_t, should_live, mnot_live)
-    if not specs:
-        return spark.createDataFrame([], empty)
-
-    live = sorted(needed)
-    blocks = reader.candidate_blocks(
-        live, [dict_rows[t][1] for t in live]
-    )
-    avgdl = float(reader.stats["avgdl"])
-    idf_b = {t: idf for t, (idf, _) in dict_rows.items() if t in needed}
-    specs_b = dict(specs)
-    deleted_small, deleted_bc = tombstones_ref(reader)
-
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        deleted = deleted_bc.value if deleted_bc is not None else deleted_small
-        by_term = {t: _decode_term(g) for t, g in pdf.groupby("term")}
-        outs = []
-        for qid, (must_l, should_l, mnot_l) in specs_b.items():
-            got = _clause_topk(
-                by_term, must_l, should_l, mnot_l, idf_b, avgdl, k, deleted
-            )
-            if got is None:
-                continue
-            ids, scores = got
-            out = pd.DataFrame({"doc_id": ids, "score": scores})
-            out.insert(0, "query_id", qid)
-            outs.append(out)
-        if not outs:
-            return pd.DataFrame(columns=["query_id", "doc_id", "score"])
-        return pd.concat(outs, ignore_index=True)
-
-    n_buckets = -(-int(reader.stats["n_docs"]) // int(reader.stats["doc_bucket_size"]))
-    n_score = max(1, min(spark.sparkContext.defaultParallelism, max(1, n_buckets)))
-    local = (
-        blocks.repartition(n_score, "doc_bucket")
-        .groupBy("doc_bucket")
-        .applyInPandas(score_bucket, schema="query_id string, " + _EMPTY_SCHEMA)
-    )
-    return ranked_topk(local, k, n_buckets)
+        specs[qid] = (must_t, sorted(set(tokenize(should))), mnot_t)
+    return _topk_plan(reader, specs, k)
 
 
 def boolean_search(

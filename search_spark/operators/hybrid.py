@@ -10,7 +10,7 @@ cosines).  k0=60 is the canonical constant from the paper.
 
 Scale shape: fusion consumes the top-k LISTS (k rows per retriever per
 query — thousands of rows at any corpus size), never the corpora; the
-heavy lifting already happened inside each retriever (WAND pruned scan,
+heavy lifting already happened inside each retriever (pruned postings scan,
 LSH-bucketed ANN).  The fuse itself is a union + one tiny hash-aggregate +
 window top-k: driver-light, broadcast-free, and identical at 10^12 docs.
 
@@ -38,7 +38,7 @@ def rrf_fuse_two(
 ) -> DataFrame:
     """Fuse a BM25 top-k list and a cosine top-k list into one ranking.
 
-    ``bm25``: (doc_id, rank) — rank 1-based, from the WAND engine.
+    ``bm25``: (doc_id, rank) — rank 1-based, from the BM25 engine.
     ``cosine``: (doc_id, rank) — rank 1-based, from the ANN engine (vec_id
     aliased to doc_id by the caller; the corpus contract aligns them).
 

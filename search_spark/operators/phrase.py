@@ -58,7 +58,7 @@ from ..functions.positional import (
     phrase_tf_np,
 )
 from ..oracle import idf as oracle_idf
-from .wand import tombstones_ref
+from .wand import decode_term, tombstones_ref
 
 #: broadcast the candidate side of the verify join only below this many
 #: candidate docs (driver-side count; above it fall back to a shuffled
@@ -115,8 +115,8 @@ def conjunctive_doc_ids(reader, terms: list[str]) -> DataFrame | None:
 
     Returns (doc_bucket, doc_id) or None when any term is OOV (no doc can
     match).  One pruned scan + one exchange sized to the true bucket
-    count; per bucket the decode is the same numpy varint path the WAND
-    scorer uses, and the intersection is sorted-array ``np.intersect1d``.
+    count; per bucket the decode is the same numpy varint path the BM25
+    kernel uses, and the intersection is sorted-array ``np.intersect1d``.
     """
     uniq = sorted(set(terms))
     dict_rows = reader._dictionary_rows(uniq)
@@ -159,13 +159,7 @@ def conjunctive_doc_ids(reader, terms: list[str]) -> DataFrame | None:
             }
         )
 
-    n_buckets = -(-int(reader.stats["n_docs"]) // int(reader.stats["doc_bucket_size"]))
-    n_part = max(1, min(reader.spark.sparkContext.defaultParallelism, n_buckets))
-    return (
-        blocks.repartition(n_part, "doc_bucket")
-        .groupBy("doc_bucket")
-        .applyInPandas(intersect, schema="doc_bucket int, doc_id long")
-    )
+    return reader.map_buckets(blocks, intersect, "doc_bucket int, doc_id long")
 
 
 def near_tf_col(toks, terms: list[str], slop: int):
@@ -513,10 +507,8 @@ def _pseudo_term_batch(
         uniq_by_q = {qid: sorted(set(terms)) for qid, terms in sparse.items()}
 
         def intersect_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-            from .boolean import _decode_term
-
             deleted = deleted_bc.value if deleted_bc is not None else deleted_small
-            by_term = {t: _decode_term(g)[0] for t, g in pdf.groupby("term")}
+            by_term = {t: decode_term(g)[0] for t, g in pdf.groupby("term")}
             bucket = int(pdf["doc_bucket"].iloc[0])
             outs = []
             for qid, uniq in uniq_by_q.items():
@@ -541,16 +533,9 @@ def _pseudo_term_batch(
                 return pd.DataFrame(columns=["query_id", "doc_bucket", "doc_id"])
             return pd.concat(outs, ignore_index=True)
 
-        n_bkts = -(-n_docs // int(reader.stats["doc_bucket_size"]))
-        n_part = max(1, min(spark.sparkContext.defaultParallelism, n_bkts))
-        cands = (
-            blocks.repartition(n_part, "doc_bucket")
-            .groupBy("doc_bucket")
-            .applyInPandas(
-                intersect_batch, schema="query_id string, doc_bucket int, doc_id long"
-            )
-            .persist()
-        )
+        cands = reader.map_buckets(
+            blocks, intersect_batch, "query_id string, doc_bucket int, doc_id long"
+        ).persist()
         per_bucket = (
             cands.groupBy("doc_bucket").count().limit(MAX_BUCKET_LIST + 1).collect()
         )
@@ -635,7 +620,6 @@ def _pseudo_term_batch(
     for p in parts[1:]:
         verified = verified.unionByName(p)
     verified = verified.persist()
-    n_buckets = -(-n_docs // int(reader.stats["doc_bucket_size"]))
     try:
         try:
             dfs = {
@@ -684,7 +668,7 @@ def _pseudo_term_batch(
                 .filter(F.col("_br") <= k)
                 .drop("_br")
             )
-            out = ranked_topk(scored, k, n_buckets, extra=("ptf",))
+            out = ranked_topk(scored, k, reader.n_buckets, extra=("ptf",))
             rows = out.collect()  # ≤ k × |queries| — materialize pre-unpersist
             return (
                 spark.createDataFrame(rows, schema=out.schema)

@@ -1,36 +1,31 @@
-"""Block-max WAND top-k scorer over compressed posting blocks (north_star).
+"""Exact BM25 top-k over compressed posting blocks: one per-bucket kernel.
 
-Exactness contract: identical top-k to the brute-force oracle — block-max
-WAND is *safe* pruning (skip only on provable upper bounds), so it keeps
-the reference's exact-search guarantee (/root/reference/README.md:13,
-index.go:26) while replacing its O(N·d) full scan with sublinear block
-skipping.
+Exactness contract: identical top-k to the brute-force oracle under the
+total order ``(score DESC, doc_id ASC)`` (SURVEY.md §7.5) — the
+reference engine's exact-search guarantee (its README.md:13,
+index.go:26).
 
-Heap semantics mirror the reference's bounded min-heap
-(/root/reference/index.go:63-86): size-k, replace the minimum only on a
-strictly-greater key, final order descending.  Total order is pinned to
-``(score DESC, doc_id ASC)`` (SURVEY.md §7.5), hence:
-
-- heap keys are ``(score, -doc_id)``;
-- pruning uses *strict* comparison (skip only when upper bound < θ): a
-  candidate scoring exactly θ could still win its tie on doc_id, so equal
-  bounds must be evaluated.
-
-Scoring arithmetic matches the oracle bit-for-bit: python-float (C double)
-per-term contributions summed in ascending term order (SURVEY.md §7.5).
+Scoring is block-at-a-time and vectorized: within one doc range every
+candidate block of a term is decoded once (delta+varint → numpy), the
+per-term contributions are added into a float64 array indexed by
+candidate position in ASCENDING TERM ORDER from a zero start — the
+oracle's summation order, so scores match it bit-for-bit — and the local
+top-k is taken with argpartition + lexsort.  The same kernel
+(:func:`clause_topk`) serves plain disjunctive BM25 (should-only specs)
+and boolean MUST / SHOULD / MUST_NOT retrieval.  Blocks are not skipped:
+the stored block metadata (``block_max_tf``, ``block_min_dl``,
+``block_max_raw``) stays in the index format for block-level pruning.
 
 Distribution model: postings are bucketed by doc range (``doc_bucket``), so
 one ``applyInPandas`` group = all query-term blocks for one doc range; each
-group runs an independent WAND with a local heap and emits its local top-k;
-the global top-k is the k best of (k × buckets) candidate rows — exact,
+group scores every query of the batch and emits its local top-k; the
+global top-k is the k best of (k × buckets) candidate rows — exact,
 because any global winner is a local winner in its bucket.  Query time thus
 shuffles only candidate *blocks* (pruned by term_bucket partition pruning +
 term predicate pushdown at the parquet scan), never raw postings rows.
 """
 
 from __future__ import annotations
-
-import heapq
 
 import numpy as np
 import pandas as pd
@@ -40,270 +35,109 @@ from pyspark.sql import types as T
 
 from .. import codec
 from ..analyzer import tokenize
+from ..functions.bm25 import B, K1
 from ..oracle import idf as oracle_idf
 from ..sources.index_store import IndexStore
 
-K1 = 1.2
-B = 0.75
-INF = float("inf")
 
+def decode_term(group: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Concat-decode one term's blocks within a bucket group →
+    (doc_ids, tfs, dls), doc_ids sorted ascending.
 
-class TermCursor:
-    """Lazy cursor over one term's block list (sorted by first_doc).
-
-    Blocks are decoded (delta+varint → numpy) only when entered; blocks
-    proven irrelevant by ``last_doc`` / block-max bounds are skipped
-    undecoded — that skip is the entire point of the block-max layout.
-    """
-
-    __slots__ = (
-        "term", "idf", "avgdl", "first", "last", "bmax", "payloads", "nblocks",
-        "bi", "pi", "docs", "tfs", "dls", "global_ub", "decoded", "skipped",
-        "cache",
-    )
-
-    def __init__(
-        self,
-        term: str,
-        idf: float,
-        blocks: pd.DataFrame,
-        avgdl: float,
-        cache: dict | None = None,
+    Blocks ARE doc-ordered within a segment (indexer.finalize), but
+    applyInPandas group rows carry no order guarantee — the explicit
+    first_doc sort below is what makes the sorted-output invariant true."""
+    group = group.sort_values("first_doc")
+    ids, tfs, dls = [], [], []
+    for ids_b, tfs_b, dls_b, n, first in zip(
+        group["doc_ids_delta"], group["tfs"], group["dls"],
+        group["n_docs"], group["first_doc"],
     ):
-        self.term = term
-        self.idf = idf
-        self.avgdl = avgdl
-        self.first = blocks["first_doc"].to_numpy()
-        self.last = blocks["last_doc"].to_numpy()
-        # Safe bound for the LIVE avgdl, derived from (max_tf, min_dl) —
-        # the stored block_max_raw is only valid for the avgdl the segment
-        # was encoded with, which drifts in incremental indexes
-        # (codec.block_upper_bound docstring).
-        self.bmax = codec.block_upper_bound(
-            blocks["block_max_tf"].to_numpy(), blocks["block_min_dl"].to_numpy(), avgdl, K1, B
-        )
-        self.payloads = list(
-            zip(blocks["doc_ids_delta"], blocks["tfs"], blocks["dls"], blocks["n_docs"])
-        )
-        self.nblocks = len(self.payloads)
-        self.bi = 0
-        self.pi = 0
-        self.docs = None
-        self.global_ub = idf * float(self.bmax.max()) if self.nblocks else 0.0
-        self.decoded = 0
-        self.skipped = 0
-        # shared per-bucket decode cache, keyed (term, first_doc): within a
-        # doc_bucket a term's blocks are disjoint doc ranges, so first_doc
-        # identifies the block; queries of a batch sharing a term hit the
-        # same decoded arrays instead of re-running the varint decode
-        self.cache = cache
-
-    # -- state ---------------------------------------------------------
-    def exhausted(self) -> bool:
-        return self.bi >= self.nblocks
-
-    def cur_doc(self) -> float:
-        if self.exhausted():
-            return INF
-        if self.docs is None:
-            # not decoded: current position is the block start, whose docID
-            # is stored exactly in metadata — no decode needed to peek.
-            return float(self.first[self.bi])
-        return float(self.docs[self.pi])
-
-    def block_ub(self) -> float:
-        return self.idf * float(self.bmax[self.bi]) if not self.exhausted() else 0.0
-
-    def block_last(self) -> int:
-        return int(self.last[self.bi])
-
-    # -- movement ------------------------------------------------------
-    def _decode(self) -> None:
-        if self.docs is None:
-            first = int(self.first[self.bi])
-            key = (self.term, first)
-            hit = self.cache.get(key) if self.cache is not None else None
-            if hit is None:
-                ids_b, tfs_b, dls_b, n = self.payloads[self.bi]
-                n = int(n)
-                hit = (
-                    codec.decode_doc_ids(ids_b, first, n),
-                    codec.decode_tfs(tfs_b, n),
-                    codec.decode_dls(dls_b, n),
-                )
-                if self.cache is not None:
-                    self.cache[key] = hit
-                self.decoded += 1
-            self.docs, self.tfs, self.dls = hit
-
-    def shallow_to(self, d: int) -> None:
-        """Advance block pointer (no decode) until last_doc >= d."""
-        while not self.exhausted() and self.last[self.bi] < d:
-            if self.docs is None:
-                self.skipped += 1
-            self.bi += 1
-            self.docs = None
-            self.pi = 0
-
-    def skip_to(self, d: int) -> None:
-        """Position at the first posting with doc >= d."""
-        self.shallow_to(d)
-        if self.exhausted():
-            return
-        if self.docs is None and self.first[self.bi] >= d:
-            return  # block starts at/after target: stay at pi=0, decode deferred
-        self._decode()
-        # never move backwards: WAND only skips forward
-        self.pi = max(self.pi, int(np.searchsorted(self.docs, d)))
-        if self.pi >= len(self.docs):  # d beyond decoded block (can't happen after shallow_to)
-            self.bi += 1
-            self.docs = None
-            self.pi = 0
-
-    def advance(self) -> None:
-        """Move one posting forward."""
-        self._decode()
-        self.pi += 1
-        if self.pi >= len(self.docs):
-            self.bi += 1
-            self.docs = None
-            self.pi = 0
-
-    def score_cur(self) -> float:
-        """BM25 contribution at the current posting (python-float math,
-        bit-identical to oracle.term_score)."""
-        self._decode()
-        tf = float(self.tfs[self.pi])
-        dl = float(self.dls[self.pi])
-        return self.idf * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / self.avgdl))
+        n = int(n)
+        ids.append(codec.decode_doc_ids(ids_b, int(first), n))
+        tfs.append(codec.decode_tfs(tfs_b, n))
+        dls.append(codec.decode_dls(dls_b, n))
+    return np.concatenate(ids), np.concatenate(tfs), np.concatenate(dls)
 
 
-def wand_topk(
-    blocks_by_term: dict[str, pd.DataFrame],
-    qidf: dict[str, float],
+def clause_topk(
+    by_term: dict,
+    must: list[str],
+    should: list[str],
+    must_not: list[str],
+    idf: dict[str, float],
     avgdl: float,
     k: int,
-    cache: dict | None = None,
-    deleted: frozenset | None = None,
-) -> tuple[list[tuple[int, float]], dict]:
-    """Exact top-k over one doc range via block-max WAND.
+    deleted: frozenset | None,
+) -> tuple[np.ndarray, np.ndarray] | None:
+    """Exact local top-k of ONE query spec over one bucket's decoded terms
+    (``by_term``: term → (doc_ids, tfs, dls), each sorted unique by
+    doc_id).  Returns (doc_ids, scores) ordered (score DESC, doc_id ASC),
+    or None when the spec matches nothing in this bucket.
 
-    ``deleted`` (tombstoned doc_ids) never enter the heap — their cursors
-    advance normally so pruning and progress are unaffected.
-
-    Returns ([(doc_id, score)] ordered (score DESC, doc_id ASC), counters).
-    """
-    if k <= 0:
-        return [], {}
-    cursors = []
-    for term in sorted(blocks_by_term):  # ascending term order → fixed sum order
-        blk = blocks_by_term[term].sort_values("first_doc")
-        cursors.append(TermCursor(term, qidf[term], blk, avgdl, cache))
-    heap: list[tuple[float, float]] = []  # (score, -doc_id)
-
-    def theta() -> float:
-        return heap[0][0] if len(heap) == k else -INF
-
-    # Defensive progress guard: every iteration must advance some cursor by
-    # at least one posting or one block, so iterations are bounded by
-    # O(postings + blocks) per cursor.  A pruning bug that stops making
-    # progress (the round-2 skip-cap hang) must fail LOUDLY here instead of
-    # stalling an executor task forever.
-    max_iters = 8 + 4 * sum(
-        int(blocks_by_term[t]["n_docs"].sum()) + len(blocks_by_term[t])
-        for t in blocks_by_term
-    ) * max(1, len(cursors))
-    iters = 0
-
-    active = [c for c in cursors if not c.exhausted()]
-    while active:
-        iters += 1
-        if iters > max_iters:
-            raise RuntimeError(
-                "wand_topk exceeded its safe iteration bound — block-skip "
-                "pruning stopped making progress (engine bug; report the "
-                "corpus/query)"
-            )
-        order = sorted(active, key=lambda c: c.cur_doc())
-        th = theta()
-        acc = 0.0
-        pivot = -1
-        for i, c in enumerate(order):
-            acc += c.global_ub
-            if acc >= th:
-                pivot = i
+    Candidates: the intersection of the ``must`` posting lists, or — with
+    no must term — the union of the ``should`` lists; minus every
+    ``must_not`` posting and every tombstoned doc.  Score: BM25 over the
+    distinct (must ∪ should) terms a candidate contains, summed in
+    ascending term order.  A plain BM25 query is the should-only spec."""
+    if must:
+        musts = [by_term[t][0] for t in must if t in by_term]
+        if len(musts) < len(must):
+            return None
+        musts.sort(key=len)
+        cand = musts[0]
+        for ids in musts[1:]:
+            cand = np.intersect1d(cand, ids, assume_unique=True)
+            if cand.shape[0] == 0:
                 break
-        if pivot < 0:
-            break  # no doc can beat θ — done
-        pivot_doc = order[pivot].cur_doc()
-        if pivot_doc == INF:
-            break
-        pivot_doc = int(pivot_doc)
-
-        if int(order[0].cur_doc()) == pivot_doc:
-            # candidates aligned; refine with block-level maxima before decode
-            aligned = [c for c in order if c.cur_doc() == pivot_doc]
-            for c in aligned:
-                c.shallow_to(pivot_doc)
-            block_acc = sum(c.block_ub() for c in aligned if not c.exhausted())
-            if len(heap) == k and block_acc < th:
-                # whole aligned blocks can't reach θ.  Safe jump target:
-                # d' = min(current block ends)+1, capped AT (not past) the
-                # next cursor positioned STRICTLY BEYOND the pivot — a doc
-                # there may combine aligned + unaligned contributions, so we
-                # may not skip over it.  (Capping at order[pivot+1] naively
-                # could yield d' == pivot_doc when alignment extends past
-                # the pivot index — an infinite loop.)  pivot_doc itself is
-                # proven < θ (ALL its mass is in the aligned cursors: any
-                # cursor past it no longer contains it), so d' ≥ pivot_doc+1
-                # is always safe AND guarantees progress.
-                d_prime = 1 + min(
-                    (c.block_last() for c in aligned if not c.exhausted()),
-                    default=pivot_doc,
-                )
-                nxt = next(
-                    (
-                        int(c.cur_doc())
-                        for c in order
-                        if c.cur_doc() != INF and c.cur_doc() > pivot_doc
-                    ),
-                    None,
-                )
-                if nxt is not None:
-                    d_prime = min(d_prime, nxt)
-                d_prime = max(d_prime, pivot_doc + 1)
-                for c in aligned:
-                    c.skip_to(d_prime)
-            elif deleted and pivot_doc in deleted:
-                for c in aligned:  # tombstoned: skip scoring, keep progress
-                    c.advance()
-            else:
-                # sum in ascending term order for bit-identity with oracle
-                score = 0.0
-                for c in sorted(aligned, key=lambda c: c.term):
-                    score += c.score_cur()
-                key = (score, -float(pivot_doc))
-                if len(heap) < k:
-                    heapq.heappush(heap, key)
-                elif key > heap[0]:  # strictly greater — index.go:74
-                    heapq.heapreplace(heap, key)
-                for c in aligned:
-                    c.advance()
-        else:
-            # advance the laggard cursor up to the pivot document
-            order[0].skip_to(pivot_doc)
-
-        active = [c for c in cursors if not c.exhausted()]
-
-    out = sorted(((int(-nd), s) for s, nd in heap), key=lambda r: (-r[1], r[0]))
-    counters = {
-        "blocks_decoded": sum(c.decoded for c in cursors),
-        "blocks_skipped": sum(c.skipped for c in cursors),
-    }
-    return out, counters
+    else:
+        unions = [by_term[t][0] for t in should if t in by_term]
+        if not unions:
+            return None
+        cand = np.unique(np.concatenate(unions))
+    if cand.shape[0] and must_not:
+        excl = [by_term[t][0] for t in must_not if t in by_term]
+        if excl:
+            cand = cand[~np.isin(cand, np.concatenate(excl), assume_unique=False)]
+    if deleted and cand.shape[0]:
+        cand = cand[~np.isin(cand, np.fromiter(deleted, dtype=np.int64))]
+    if cand.shape[0] == 0:
+        return None
+    # BM25 over scoring terms, ascending term order, accumulated by
+    # candidate position (cand and each posting list are sorted unique)
+    scores = np.zeros(cand.shape[0], dtype=np.float64)
+    for term in sorted(set(must) | set(should)):
+        got = by_term.get(term)
+        if got is None:
+            continue
+        docs, tf_i, dl_i = got
+        pos = np.searchsorted(cand, docs)
+        pos_c = np.minimum(pos, cand.shape[0] - 1)
+        mask = cand[pos_c] == docs
+        if not mask.any():
+            continue
+        tf = tf_i[mask].astype(np.float64)
+        dl = dl_i[mask].astype(np.float64)
+        contrib = idf[term] * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
+        scores[pos_c[mask]] += contrib
+    keep = np.flatnonzero(scores > 0.0)
+    if keep.shape[0] == 0:
+        return None
+    if keep.shape[0] > k:
+        # kth-largest score via partial select; keep everything at/above it
+        # (boundary ties included) so the exact (score DESC, doc_id ASC)
+        # sort below decides the final k
+        kth = -np.partition(-scores[keep], k - 1)[k - 1]
+        keep = keep[scores[keep] >= kth]
+    order = np.lexsort((cand[keep], -scores[keep]))[:k]
+    chosen = keep[order]
+    return cand[chosen], scores[chosen]
 
 
-#: posting-count dispatch threshold between the two exact scorers
+#: (query, doc_bucket) group size in candidate postings above which
+#: perfbench counts a group as dense (its ``wand.dense_group_share``
+#: input property).  The engine itself scores every group with
+#: :func:`clause_topk`.
 WAND_MAX_POSTINGS = 1024
 
 #: bucket count above which the final per-query top-k merge goes
@@ -357,79 +191,6 @@ def ranked_topk(
     )
 
 
-def dense_topk(
-    blocks_by_term: dict[str, pd.DataFrame],
-    qidf: dict[str, float],
-    avgdl: float,
-    k: int,
-    cache: dict | None = None,
-    deleted: frozenset | None = None,
-) -> list[tuple[int, float]]:
-    """Exact top-k over one doc range via dense vectorized accumulation —
-    the numpy "SIMD path" of the scorer pair (the reference keeps the same
-    pair: AVX kernel + scalar reference, cross-checked —
-    /root/reference/internal/cosine/simd/simd.go:33-44, simd_test.go:52-74).
-
-    Per-posting Python stepping (wand_topk) costs ~µs/posting; on Zipf-head
-    query terms a doc range is dense and block-max pruning cannot skip, so
-    the per-group work degenerates to a full merge — this path does that
-    merge as numpy array ops: decode every candidate block, accumulate
-    per-doc scores term-by-term in ASCENDING TERM ORDER into a float64
-    array (bit-identical summation order to the oracle and to wand_topk),
-    then select top-k under (score DESC, doc_id ASC).
-
-    Used for groups with > WAND_MAX_POSTINGS candidate postings; wand_topk
-    (posting-level block-max WAND) serves sparse groups where skipping
-    wins.  Equality of the two scorers is property-tested.
-    """
-    if k <= 0:
-        return []
-    terms = sorted(blocks_by_term)
-    # local dense index over the group's doc range
-    lo = min(int(blocks_by_term[t]["first_doc"].min()) for t in terms)
-    hi = max(int(blocks_by_term[t]["last_doc"].max()) for t in terms)
-    width = hi - lo + 1
-    scores = np.zeros(width, dtype=np.float64)
-    seen = np.zeros(width, dtype=bool)
-    for term in terms:  # ascending — pins the float summation order
-        idf = qidf[term]
-        blk = blocks_by_term[term]
-        for ids_b, tfs_b, dls_b, n, first in zip(
-            blk["doc_ids_delta"], blk["tfs"], blk["dls"], blk["n_docs"], blk["first_doc"]
-        ):
-            n = int(n)
-            key = (term, int(first))
-            hit = cache.get(key) if cache is not None else None
-            if hit is None:
-                hit = (
-                    codec.decode_doc_ids(ids_b, int(first), n),
-                    codec.decode_tfs(tfs_b, n),
-                    codec.decode_dls(dls_b, n),
-                )
-                if cache is not None:
-                    cache[key] = hit
-            docs, tf_i, dl_i = hit
-            tf = tf_i.astype(np.float64)
-            dl = dl_i.astype(np.float64)
-            contrib = idf * tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
-            idx = docs - lo
-            scores[idx] += contrib  # unique docs per term: plain fancy-index add
-            seen[idx] = True
-    cand = np.flatnonzero(seen)
-    if deleted and cand.shape[0]:
-        dele = np.fromiter(deleted, dtype=np.int64)
-        cand = cand[~np.isin(cand + lo, dele)]
-    if cand.shape[0] > k:
-        # kth-largest score via partial select; keep everything at/above it
-        # (boundary ties included) so the exact (score DESC, doc_id ASC)
-        # sort below decides the final k
-        kth = -np.partition(-scores[cand], k - 1)[k - 1]
-        cand = cand[scores[cand] >= kth]
-    order = np.lexsort((cand + lo, -scores[cand]))[:k]
-    chosen = cand[order]
-    return [(int(d + lo), float(scores[d])) for d in chosen]
-
-
 # ---------------------------------------------------------------------------
 # Spark query pipeline over an IndexStore
 # ---------------------------------------------------------------------------
@@ -453,6 +214,72 @@ def tombstones_ref(reader) -> tuple[frozenset | None, object | None]:
     if ref is not None:
         return ref()
     return (getattr(reader, "deleted", frozenset()) or None), None
+
+
+_RANKED_SCHEMA = "query_id string, rank int, doc_id bigint, score double"
+
+
+def _topk_plan(
+    reader,
+    specs: dict[str, tuple[list[str], list[str], list[str]]],
+    k: int,
+    boosts: dict[str, float] | None = None,
+) -> DataFrame:
+    """The one scoring plan: ``specs`` = {query_id: (must, should,
+    must_not)} analyzed terms → (query_id, rank, doc_id, score).
+
+    dictionary (one lookup for the batch's unseen terms) → partition-
+    pruned, term-pushed candidate block scan over every spec's live terms
+    → ONE ``doc_bucket`` exchange whose groups decode each term once and
+    run :func:`clause_topk` for every spec → hierarchical exact top-k
+    (:func:`ranked_topk`).  An OOV must term, or no live (must ∪ should)
+    term, yields 0 rows for that query only; OOV should / must_not terms
+    drop out of their clause.  ``boosts`` scale a term's idf."""
+    specs = {qid: spec for qid, spec in specs.items() if spec[0] or spec[1]}
+    if k <= 0 or not specs:
+        return reader.spark.createDataFrame([], _RANKED_SCHEMA)
+    all_terms = sorted({t for spec in specs.values() for part in spec for t in part})
+    dict_rows = reader._dictionary_rows(all_terms)
+    live_specs: dict[str, tuple[list[str], list[str], list[str]]] = {}
+    for qid, (must, should, must_not) in specs.items():
+        if any(t not in dict_rows for t in must):
+            continue  # OOV must term → this query matches nothing
+        should_live = [t for t in should if t in dict_rows]
+        if must or should_live:
+            live_specs[qid] = (
+                must, should_live, [t for t in must_not if t in dict_rows]
+            )
+    if not live_specs:
+        return reader.spark.createDataFrame([], _RANKED_SCHEMA)
+    live = sorted({t for spec in live_specs.values() for part in spec for t in part})
+    blocks = reader.candidate_blocks(live, [dict_rows[t][1] for t in live])
+    boosts = boosts or {}
+    idf = {t: dict_rows[t][0] * float(boosts.get(t, 1.0)) for t in live}
+    avgdl = float(reader.stats["avgdl"])
+    # small delete sets ride the closure; large ones go through ONE
+    # broadcast per snapshot — identical results either way
+    deleted_small, deleted_bc = tombstones_ref(reader)
+
+    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
+        deleted = deleted_bc.value if deleted_bc is not None else deleted_small
+        # each term decodes ONCE per bucket for the whole batch (head terms
+        # typically appear in many queries of a batch)
+        by_term = {t: decode_term(g) for t, g in pdf.groupby("term")}
+        outs = []
+        for qid, (must, should, must_not) in live_specs.items():
+            got = clause_topk(by_term, must, should, must_not, idf, avgdl, k, deleted)
+            if got is None:
+                continue
+            ids, scores = got
+            out = pd.DataFrame({"doc_id": ids, "score": scores})
+            out.insert(0, "query_id", qid)
+            outs.append(out)
+        if not outs:
+            return pd.DataFrame(columns=["query_id", "doc_id", "score"])
+        return pd.concat(outs, ignore_index=True)
+
+    local = reader.map_buckets(blocks, score_bucket, RESULT_SCHEMA)
+    return ranked_topk(local, k, reader.n_buckets)
 
 
 class IndexReader:
@@ -610,6 +437,28 @@ class IndexReader:
             pred = F.col("term_bucket").isin(sorted(set(buckets))) & pred
         return posts.filter(pred)
 
+    @property
+    def n_buckets(self) -> int:
+        """Doc-bucket count of the snapshot (from stats)."""
+        return -(-int(self.stats["n_docs"]) // int(self.stats["doc_bucket_size"]))
+
+    def map_buckets(self, blocks: DataFrame, fn, schema) -> DataFrame:
+        """``applyInPandas(fn, schema)`` over ``blocks`` grouped by
+        ``doc_bucket``, behind ONE exchange.
+
+        Explicit partition count: per-bucket work is Python-per-posting,
+        not bytes — AQE's byte-based coalescing would serialize it onto
+        one task at small scale, while over-partitioning pays a Python
+        worker round trip per EMPTY task.  Group count = doc buckets.
+        The hash layout matches the grouping key, so groupBy adds no
+        second exchange."""
+        n = max(1, min(self.spark.sparkContext.defaultParallelism, self.n_buckets))
+        return (
+            blocks.repartition(n, "doc_bucket")
+            .groupBy("doc_bucket")
+            .applyInPandas(fn, schema=schema)
+        )
+
     def batch_search(
         self,
         queries: list[tuple[str, str]],
@@ -620,89 +469,19 @@ class IndexReader:
 
         ``boosts`` (term → positive weight) scales each term's
         contribution: BM25 is linear in idf per term, so boosting is an
-        idf scale — the WAND upper bounds derive from the scaled idf and
-        stay exact.
+        idf scale.
 
-        Plan: candidate blocks (pruned scan) → applyInPandas per
-        ``doc_bucket`` group scoring ALL queries of the batch against the
-        bucket (shared-term blocks cross the wire and decode ONCE per
-        bucket, not once per query — head terms like "the" typically
-        appear in many queries of a batch) → global per-query top-k over
-        k×buckets candidate rows.  Returns (query_id, rank, doc_id, score).
+        Each query is the should-only spec of its distinct terms, scored
+        by :func:`_topk_plan` — all queries of the batch share one candidate
+        scan and one per-bucket scoring pass.
+        Returns (query_id, rank, doc_id, score).
         """
-        if k <= 0:
-            return self.spark.createDataFrame(
-                [], "query_id string, rank int, doc_id bigint, score double"
-            )
-        qterms_all = {qid: sorted(set(tokenize(text))) for qid, text in queries}
-        all_terms = sorted({t for ts in qterms_all.values() for t in ts})
-        dict_rows = self._dictionary_rows(all_terms)
-        live_terms = [t for t in all_terms if t in dict_rows]
-        qterms = {
-            qid: [t for t in ts if t in dict_rows]
-            for qid, ts in qterms_all.items()
-            if any(t in dict_rows for t in ts)
+        if boosts and any(w <= 0 for w in boosts.values()):
+            raise ValueError(f"boosts must be positive: {boosts}")
+        specs = {
+            qid: ([], sorted(set(tokenize(text))), []) for qid, text in queries
         }
-        if not qterms:
-            return self.spark.createDataFrame(
-                [], "query_id string, rank int, doc_id bigint, score double"
-            )
-
-        blocks = self.candidate_blocks(live_terms, [b for _, b in dict_rows.values()])
-        avgdl = float(self.stats["avgdl"])
-        idf_b = {t: idf for t, (idf, _) in dict_rows.items()}
-        if boosts:
-            if any(w <= 0 for w in boosts.values()):
-                raise ValueError(f"boosts must be positive: {boosts}")
-            idf_b = {t: idf * float(boosts.get(t, 1.0)) for t, idf in idf_b.items()}
-        qterms_b = dict(qterms)  # captured in the closure (tiny)
-        # small delete sets ride the closure; large ones go through ONE
-        # broadcast per snapshot (TOMBSTONE_BROADCAST_MIN) — identical
-        # results either way, pinned in tests/test_deletes.py
-        deleted_small, deleted_bc = self.tombstones_ref()
-
-        def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            deleted_b = deleted_bc.value if deleted_bc is not None else deleted_small
-            by_term = {t: g for t, g in pdf.groupby("term")}
-            outs = []
-            # ONE decode cache per bucket group: shared-term blocks decode
-            # once for the whole batch, not once per query
-            cache: dict = {}
-            for qid, terms in qterms_b.items():
-                sub = {t: by_term[t] for t in terms if t in by_term}
-                if not sub:
-                    continue
-                # scorer dispatch: posting-level block-max WAND where
-                # skipping can win (sparse), vectorized dense accumulation
-                # where per-posting Python would crawl.  Both exact and
-                # bit-identical (property-tested).
-                n_postings = int(sum(g["n_docs"].sum() for g in sub.values()))
-                if n_postings <= WAND_MAX_POSTINGS:
-                    top, _ = wand_topk(sub, idf_b, avgdl, k, cache, deleted_b)
-                else:
-                    top = dense_topk(sub, idf_b, avgdl, k, cache, deleted_b)
-                if top:
-                    out = pd.DataFrame(top, columns=["doc_id", "score"])
-                    out.insert(0, "query_id", qid)
-                    outs.append(out)
-            if not outs:
-                return pd.DataFrame(columns=["query_id", "doc_id", "score"])
-            return pd.concat(outs, ignore_index=True)
-
-        # explicit partition count: the scorer's cost is Python-per-posting,
-        # not bytes — AQE's byte-based coalescing would serialize it onto
-        # one task at small scale, while over-partitioning pays a Python
-        # worker round trip per EMPTY task.  Group count = doc buckets
-        # (known from stats).  Hash layout matches the grouping key, so
-        # groupBy below adds no second exchange.
-        n_buckets = -(-int(self.stats["n_docs"]) // int(self.stats["doc_bucket_size"]))
-        n_score = max(1, min(self.spark.sparkContext.defaultParallelism, max(1, n_buckets)))
-        local = (
-            blocks.repartition(n_score, "doc_bucket")
-            .groupBy("doc_bucket")
-            .applyInPandas(score_bucket, schema=RESULT_SCHEMA)
-        )
-        return ranked_topk(local, k, n_buckets)
+        return _topk_plan(self, specs, k, boosts)
 
     def search(self, query_text: str, k: int = 10) -> DataFrame:
         """Single query → (rank, doc_id, score)."""

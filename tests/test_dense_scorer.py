@@ -1,11 +1,14 @@
-"""Parity of the two exact scorers: posting-level block-max WAND vs the
-vectorized dense accumulator — the engine's analogue of the reference's
-SIMD-vs-scalar kernel equivalence tests
-(/root/reference/internal/cosine/simd/simd_test.go:52-74).
+"""The per-bucket BM25 kernel (wand.decode_term + wand.clause_topk) against
+a naive reference — the engine's analogue of the reference engine's
+SIMD-vs-scalar kernel equivalence tests (its
+internal/cosine/simd/simd_test.go:52-74).
 
-Both must return IDENTICAL (doc_id, score) lists — same docs, same ranks,
-float-equal scores (same summation order) — on arbitrary posting data,
-including dense Zipf-head shapes and exact-tie shapes."""
+The reference loops in plain Python over the raw postings with the
+oracle's formula, sums in ascending term order and sorts by
+(score DESC, doc_id ASC).  The kernel must return the IDENTICAL
+(doc_id, score) list — same docs, same ranks, float-equal scores — on
+arbitrary posting data, including dense Zipf-head shapes and exact-tie
+shapes."""
 
 from __future__ import annotations
 
@@ -14,23 +17,51 @@ import pandas as pd
 import pytest
 
 from search_spark import codec
-from search_spark.operators.wand import dense_topk, wand_topk
+from search_spark.operators.wand import clause_topk, decode_term
+from search_spark.oracle import term_score
 
 AVGDL = 20.0
 
 
-def _blocks_df(doc_ids, tfs, dls):
-    rows = codec.make_blocks(
-        np.asarray(doc_ids, dtype=np.int64),
-        np.asarray(tfs, dtype=np.int64),
-        np.asarray(dls, dtype=np.int64),
-        AVGDL,
-    )
-    return pd.DataFrame(rows)
+def naive_topk(postings, qidf, avgdl, k):
+    """postings: term → [(doc_id, tf, dl)] → [(doc_id, score)] top-k."""
+    scores: dict[int, float] = {}
+    for term in sorted(postings):
+        for doc, tf, dl in postings[term]:
+            doc = int(doc)
+            scores[doc] = scores.get(doc, 0.0) + term_score(int(tf), int(dl), avgdl, qidf[term])
+    return sorted(scores.items(), key=lambda r: (-r[1], r[0]))[:k]
+
+
+def kernel_topk(blocks, qidf, avgdl, k):
+    """blocks: term → encoded block DataFrame → the kernel's should-only
+    top-k as [(doc_id, score)]."""
+    by_term = {t: decode_term(g) for t, g in blocks.items()}
+    got = clause_topk(by_term, [], sorted(blocks), [], qidf, avgdl, k, None)
+    if got is None:
+        return []
+    return [(int(d), float(s)) for d, s in zip(*got)]
+
+
+def _term(doc_ids, tfs, dls, avgdl=AVGDL):
+    """(encoded block DataFrame, raw postings) for one term."""
+    docs = np.asarray(doc_ids, dtype=np.int64)
+    tfs = np.asarray(tfs, dtype=np.int64)
+    dls = np.asarray(dls, dtype=np.int64)
+    blocks = pd.DataFrame(codec.make_blocks(docs, tfs, dls, avgdl))
+    return blocks, list(zip(docs, tfs, dls))
+
+
+def _check(terms, qidf, avgdl, k):
+    blocks = {t: b for t, (b, _) in terms.items()}
+    postings = {t: p for t, (_, p) in terms.items()}
+    got = kernel_topk(blocks, qidf, avgdl, k)
+    assert got == naive_topk(postings, qidf, avgdl, k)  # docs, order, exact floats
+    return got
 
 
 def _random_corpus(rng, n_terms, n_docs, density):
-    by_term, qidf = {}, {}
+    terms, qidf = {}, {}
     for t in range(n_terms):
         term = f"t{t:02d}"
         mask = rng.random(n_docs) < density[t]
@@ -39,9 +70,9 @@ def _random_corpus(rng, n_terms, n_docs, density):
             continue
         tfs = rng.integers(1, 6, size=docs.size)
         dls = rng.integers(5, 60, size=docs.size)
-        by_term[term] = _blocks_df(docs, tfs, dls)
+        terms[term] = _term(docs, tfs, dls)
         qidf[term] = float(rng.uniform(0.1, 3.0))
-    return by_term, qidf
+    return terms, qidf
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3, 4, 5])
@@ -50,90 +81,49 @@ def test_wand_dense_parity_random(seed, k):
     rng = np.random.default_rng(seed)
     n_terms = int(rng.integers(1, 6))
     density = rng.uniform(0.01, 0.9, size=n_terms)
-    by_term, qidf = _random_corpus(rng, n_terms, 2000, density)
-    if not by_term:
+    terms, qidf = _random_corpus(rng, n_terms, 2000, density)
+    if not terms:
         return
-    w, _ = wand_topk(by_term, qidf, AVGDL, k)
-    d = dense_topk(by_term, qidf, AVGDL, k)
-    assert w == d  # docs, order, AND exact float scores
+    _check(terms, qidf, AVGDL, k)
 
 
 def test_parity_exact_ties():
     # identical tf/dl everywhere → all scores equal → pure doc_id tiebreak
     docs = np.arange(100, 400, 3)
-    by_term = {"a": _blocks_df(docs, np.full(docs.size, 2), np.full(docs.size, 20))}
-    qidf = {"a": 1.5}
-    w, _ = wand_topk(by_term, qidf, AVGDL, 7)
-    d = dense_topk(by_term, qidf, AVGDL, 7)
-    assert w == d
-    assert [doc for doc, _ in d] == list(docs[:7])  # ascending doc_id on ties
+    terms = {"a": _term(docs, np.full(docs.size, 2), np.full(docs.size, 20))}
+    got = _check(terms, {"a": 1.5}, AVGDL, 7)
+    assert [doc for doc, _ in got] == list(docs[:7])  # ascending doc_id on ties
 
 
 def test_parity_multi_block_head_term():
-    # >8 blocks for one term + a sparse term: exercises block iteration and
-    # the dense path's cross-term accumulation order
+    # >8 blocks for one term + a sparse term: exercises the multi-block
+    # decode and the cross-term accumulation order
     docs_a = np.arange(0, 1500)           # dense head term, 12 blocks
     docs_b = np.arange(0, 1500, 97)       # sparse term
-    by_term = {
-        "a": _blocks_df(docs_a, (docs_a % 4) + 1, (docs_a % 37) + 5),
-        "b": _blocks_df(docs_b, (docs_b % 3) + 1, (docs_b % 29) + 5),
+    terms = {
+        "a": _term(docs_a, (docs_a % 4) + 1, (docs_a % 37) + 5),
+        "b": _term(docs_b, (docs_b % 3) + 1, (docs_b % 29) + 5),
     }
-    qidf = {"a": 0.2, "b": 2.7}
-    w, _ = wand_topk(by_term, qidf, AVGDL, 10)
-    d = dense_topk(by_term, qidf, AVGDL, 10)
-    assert w == d
+    assert len(terms["a"][0]) > 8
+    _check(terms, {"a": 0.2, "b": 2.7}, AVGDL, 10)
 
 
 def test_pruning_safe_under_avgdl_drift():
-    """Regression: blocks encoded with a stale/hinted avgdl must still give
-    exact top-k when queried under a different (larger) live avgdl — the
-    stored block_max_raw is NOT a valid bound then, and pruning against it
-    lost a true top-10 doc in the streaming path (found 2026-08-17)."""
+    """Blocks encoded with a stale/hinted avgdl must still give the exact
+    top-k when queried under a different (larger) live avgdl — the stored
+    block metadata is only valid for the avgdl it was encoded with, and a
+    streaming store's avgdl drifts."""
     rng = np.random.default_rng(99)
     docs = np.sort(rng.choice(5000, size=1000, replace=False))
     tfs = rng.integers(1, 5, size=1000)
     dls = rng.integers(5, 60, size=1000)
-    stale = codec.make_blocks(docs, tfs, dls, avgdl=10.0)  # wrong hint
-    by_term = {"a": pd.DataFrame(stale)}
-    qidf = {"a": 1.3}
-    live_avgdl = 30.0  # larger than encode hint → true scores exceed stored bound
-    w, counters = wand_topk(by_term, qidf, live_avgdl, 10)
-    d = dense_topk(by_term, qidf, live_avgdl, 10)
-    assert w == d  # wand must not have pruned a winner
+    terms = {"a": _term(docs, tfs, dls, avgdl=10.0)}  # wrong hint
+    _check(terms, {"a": 1.3}, 30.0, 10)  # live avgdl larger than the hint
 
 
 def test_k_edge_cases():
     docs = np.arange(50)
-    by_term = {"a": _blocks_df(docs, np.ones(50), np.full(50, 10))}
-    qidf = {"a": 1.0}
-    assert dense_topk(by_term, qidf, AVGDL, 0) == []
-    w, _ = wand_topk(by_term, qidf, AVGDL, 100)
-    d = dense_topk(by_term, qidf, AVGDL, 100)
-    assert w == d and len(d) == 50  # k > candidates → all, ordered
-
-
-def test_wand_skip_terminates_when_alignment_extends_past_pivot():
-    """Regression: the block-skip jump target was capped at
-    order[pivot+1].cur_doc(), which can itself equal pivot_doc when more
-    than pivot+1 cursors are aligned — d' == pivot_doc made skip_to a
-    no-op and wand_topk spun forever.  This is the reproducing geometry:
-    after doc5 fills the k=1 heap, both cursors align at doc10 with block
-    bounds below θ."""
-    import numpy as np
-    import pandas as pd
-
-    from search_spark import codec
-    from search_spark.operators.wand import wand_topk
-
-    def blocks(postings):  # [(doc, tf, dl)] → block DataFrame
-        d = np.array([p[0] for p in postings], dtype=np.int64)
-        t = np.array([p[1] for p in postings], dtype=np.int64)
-        dl = np.array([p[2] for p in postings], dtype=np.int64)
-        return pd.DataFrame(codec.make_blocks(d, t, dl, avgdl=10.0))
-
-    by_term = {
-        "a": pd.concat([blocks([(5, 50, 10)]), blocks([(10, 1, 10)])], ignore_index=True),
-        "b": blocks([(10, 1, 10)]),
-    }
-    top, _ = wand_topk(by_term, {"a": 1.0, "b": 1.0}, 10.0, 1)
-    assert len(top) == 1 and top[0][0] == 5  # terminates, correct winner
+    terms = {"a": _term(docs, np.ones(50), np.full(50, 10))}
+    assert _check(terms, {"a": 1.0}, AVGDL, 0) == []
+    assert len(_check(terms, {"a": 1.0}, AVGDL, 1)) == 1
+    assert len(_check(terms, {"a": 1.0}, AVGDL, 100)) == 50  # k > candidates → all

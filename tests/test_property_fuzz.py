@@ -1,6 +1,6 @@
 """Hypothesis property fuzzing over the frozen specs.
 
-The cross-engine contracts (analyzer, hash spec, codec, scorer pair) are
+The cross-engine contracts (analyzer, hash spec, codec, scoring kernel) are
 exactly the places where a drifted edge case silently breaks rank
 identity; fuzz them far beyond the fixture corpus.  Spark is intentionally
 NOT in the loop here (hypothesis generates hundreds of cases — driver
@@ -19,9 +19,28 @@ from hypothesis import strategies as st
 from search_spark import codec
 from search_spark.analyzer import tokenize, tokenize_pandas
 from search_spark.functions.hashing import P31, h32_py, minhash_perm_py, rolling_fp_py
-from search_spark.operators.wand import dense_topk, wand_topk
+from search_spark.operators.wand import clause_topk, decode_term
+from search_spark.oracle import term_score
 
 text_st = st.text(max_size=300)
+
+
+def _naive_topk(postings, qidf, avgdl, k):
+    """Reference top-k: a plain-Python loop over term → [(doc_id, tf, dl)]
+    with the oracle's formula, summed in ascending term order, sorted by
+    (score DESC, doc_id ASC)."""
+    scores: dict[int, float] = {}
+    for term in sorted(postings):
+        for doc, tf, dl in postings[term]:
+            scores[doc] = scores.get(doc, 0.0) + term_score(tf, dl, avgdl, qidf[term])
+    return sorted(scores.items(), key=lambda r: (-r[1], r[0]))[:k]
+
+
+def _kernel_topk(blocks, qidf, avgdl, k):
+    """The per-bucket kernel's should-only top-k over term → block frame."""
+    by_term = {t: decode_term(g) for t, g in blocks.items()}
+    got = clause_topk(by_term, [], sorted(blocks), [], qidf, avgdl, k, None)
+    return [] if got is None else [(int(d), float(s)) for d, s in zip(*got)]
 
 
 @given(st.lists(text_st, max_size=20))
@@ -100,12 +119,12 @@ def test_codec_roundtrip_arbitrary_gaps(pairs):
 )
 @settings(max_examples=150, deadline=None)
 def test_scorer_pair_fuzz(postings, n_terms, k, avgdl):
-    """wand_topk == dense_topk on arbitrary posting data split across
+    """Kernel == naive reference on arbitrary posting data split across
     arbitrary term assignments — scores float-equal, order identical."""
     rng = np.random.default_rng(len(postings) * 31 + n_terms)
     postings = sorted(postings)
     assign = rng.integers(0, n_terms, size=len(postings))
-    by_term, qidf = {}, {}
+    by_term, raw, qidf = {}, {}, {}
     for t in range(n_terms):
         rows = [p for p, a in zip(postings, assign) if a == t]
         if not rows:
@@ -119,12 +138,11 @@ def test_scorer_pair_fuzz(postings, n_terms, k, avgdl):
             avgdl,
         )
         by_term[term] = pd.DataFrame(blk)
+        raw[term] = rows
         qidf[term] = float(0.05 + (t + 1) * 0.7)
     if not by_term:
         return
-    w, _ = wand_topk(by_term, qidf, avgdl, k)
-    d = dense_topk(by_term, qidf, avgdl, k)
-    assert w == d
+    assert _kernel_topk(by_term, qidf, avgdl, k) == _naive_topk(raw, qidf, avgdl, k)
 
 
 @given(st.lists(text_st, min_size=1, max_size=30))
@@ -172,17 +190,13 @@ def test_tf_batches_matches_naive_counts(texts):
 )
 @settings(max_examples=250, deadline=None)
 def test_wand_vs_dense_on_multiblock_layouts(term_specs, k):
-    """Scorer-pair parity over MULTI-BLOCK per-term layouts (the
-    pre-compaction segment shape where the round-2 skip-cap hang lived):
-    postings runs are split at random points into separate make_blocks
-    calls, exactly like independent segments would produce.  wand_topk has
-    an internal progress guard, so a reintroduced hang fails loudly here
-    instead of wedging the suite."""
-    from search_spark import codec
-    from search_spark.operators.wand import dense_topk, wand_topk
-
+    """Kernel == naive reference over MULTI-BLOCK per-term layouts (the
+    pre-compaction segment shape): postings runs are split at random
+    points into separate make_blocks calls, exactly like independent
+    segments would produce, and the block rows of a term arrive in no
+    particular order."""
     avgdl = 7.0
-    by_term = {}
+    by_term, raw = {}, {}
     for ti, (postings, n_splits) in enumerate(term_specs):
         doc = 0
         rows = []
@@ -202,11 +216,10 @@ def test_wand_vs_dense_on_multiblock_layouts(term_specs, k):
             t = np.array([r[1] for r in piece], dtype=np.int64)
             dl = np.array([r[2] for r in piece], dtype=np.int64)
             frames.append(pd.DataFrame(codec.make_blocks(d, t, dl, avgdl)))
-        by_term[f"t{ti}"] = pd.concat(frames, ignore_index=True)
+        by_term[f"t{ti}"] = pd.concat(frames[::-1], ignore_index=True)
+        raw[f"t{ti}"] = rows
     qidf = {t: 0.5 + 0.25 * i for i, t in enumerate(sorted(by_term))}
-    w, _ = wand_topk(by_term, qidf, avgdl, k)
-    d = dense_topk(by_term, qidf, avgdl, k)
-    assert w == d
+    assert _kernel_topk(by_term, qidf, avgdl, k) == _naive_topk(raw, qidf, avgdl, k)
 
 
 @given(st.lists(text_st, min_size=1, max_size=30))
