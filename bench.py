@@ -34,7 +34,6 @@ import tempfile
 import time
 
 import numpy as np
-import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -358,18 +357,15 @@ def _prev_round_queries(sf) -> tuple[str | None, dict | None]:
 
 def run_pipeline_ops(spark, sf_dir: str) -> dict:
     """Timed pass over the training-pipeline operator families at the
-    bench SF (counts forced with .count()): dedup, similarity serving
-    paths, text stats — the non-BM25 half of the engine's surface."""
+    bench SF (counts forced with .count()): dedup, text stats and the
+    composed materialization — the non-BM25 half of the engine's surface."""
     from pyspark.sql import functions as F
 
     from search_spark.analyzer import tokens_col
     from search_spark.functions import textstats as ts
     from search_spark.operators import dedup as dd
-    from search_spark.operators import similarity as sim
-    from search_spark.operators.ann_index import LshIndex, build_lsh_index
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
     out = {}
 
     t0 = time.perf_counter()
@@ -400,24 +396,6 @@ def run_pipeline_ops(spark, sf_dir: str) -> dict:
         *[c.alias(n) for n, c in ts.quality_cols(F.col("text"), tokens_col("text")).items()],
     ).count()
     out["text_stats"] = round(time.perf_counter() - t0, 4)
-
-    lsh_root = tempfile.mkdtemp(prefix="bench_lsh_")
-    try:
-        t0 = time.perf_counter()
-        build_lsh_index(spark, emb, lsh_root, tables=8)
-        out["ann_lsh_build"] = round(time.perf_counter() - t0, 4)
-        t0 = time.perf_counter()
-        LshIndex(spark, lsh_root).topk_for_ids([0, 1, 2, 3, 4], 10).count()
-        out["ann_lsh_query5"] = round(time.perf_counter() - t0, 4)
-    finally:
-        shutil.rmtree(lsh_root, ignore_errors=True)
-
-    t0 = time.perf_counter()
-    handles = []
-    sim.cosine_top_pairs_lsh(emb, 50, dim=64, tables=8, cache_handle=handles).count()
-    for h in handles:
-        h.unpersist()
-    out["embedding_top_pairs"] = round(time.perf_counter() - t0, 4)
 
     # composed training-corpus materialization (VERDICT r3 #6) — the one
     # pipeline a real pretraining run calls end-to-end.  Per-stage split
@@ -454,19 +432,16 @@ def run_pipeline_ops(spark, sf_dir: str) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# 1.4M-turn store phases (VERDICT r4 #4/#5): head-only fulltext and ANN at
+# 1.4M-turn store phase (VERDICT r4 #4/#5): head-only fulltext at
 # 280× the reference's design ceiling (<100k entries, README.md:30),
 # tracked as JSON fields so round-over-round deltas are measured, not
-# narrated.  The stores persist under /tmp and rebuild automatically when
+# narrated.  The store persists under /tmp and rebuilds automatically when
 # missing (build time is then recorded in the phase).
 # ---------------------------------------------------------------------------
 
 BIG_ENABLED = os.environ.get("SPARK_GRAFT_BIG", "1") == "1"
 BIG_STORE = os.environ.get("SPARK_GRAFT_BIG_STORE", "/tmp/idx14")
-BIG_ANN = os.environ.get("SPARK_GRAFT_BIG_ANN", "/tmp/ann14")
 BIG_CONVS = int(os.environ.get("SPARK_GRAFT_BIG_CONVS", "200000"))
-BIG_EMB_N = int(os.environ.get("SPARK_GRAFT_BIG_EMB_N", "1400000"))
-BIG_EMB_DIM = 64
 
 
 def _big_reader(spark):
@@ -515,159 +490,10 @@ def run_big_fulltext(spark) -> dict:
     return out
 
 
-def _gen_big_emb(spark, n: int, dim: int):
-    """Deterministic clustered embeddings (4096 hash centers + strong
-    per-vector noise) — cluster structure without bucket collapse: a
-    tight cluster puts every member in ONE sign-LSH bucket per table,
-    which inflates bucket sizes ~10× past the layout's target and makes
-    recall trivially 1.0.  Pure function of vec_id, no RNG state."""
-    M = np.uint64(0xFFFFFFFFFFFFFFFF)
-
-    def h(x, salt):
-        x = (x * np.uint64(0x9E3779B97F4A7C15) + np.uint64(salt)) & M
-        x ^= x >> np.uint64(31)
-        x = (x * np.uint64(0xBF58476D1CE4E5B9)) & M
-        x ^= x >> np.uint64(29)
-        return (x >> np.uint64(11)).astype(np.float64) / float(1 << 53) * 2.0 - 1.0
-
-    def gen(batches):
-        for pdf in batches:
-            vid = pdf["id"].to_numpy().astype(np.uint64)
-            c = vid % np.uint64(4096)
-            E = np.empty((len(vid), dim), dtype=np.float64)
-            for j in range(dim):
-                E[:, j] = 0.55 * h(c, j) + 0.45 * h(vid, j + 4096)
-            yield pd.DataFrame(
-                {"vec_id": vid.astype(np.int64), "embedding": list(E.astype(np.float32))}
-            )
-
-    return spark.range(0, n, 1, 64).mapInPandas(gen, "vec_id bigint, embedding array<float>")
-
-
-def run_big_ann(spark) -> dict:
-    """Persisted multi-probe LSH ANN at 1.4M vectors: build once (13
-    auto-scaled planes → ~170-vector buckets), k=10 query batch through
-    the partition-pruned layout, recall@10 vs a numpy brute scan of the
-    same parquet."""
-    from search_spark.operators.ann_index import LshIndex, build_lsh_index
-
-    out: dict = {"n": BIG_EMB_N}
-    emb_path = os.path.join(BIG_ANN, "emb.parquet")
-    if not os.path.exists(os.path.join(BIG_ANN, "_lsh_meta.json")):
-        _mark(f"building 1.4M LSH index at {BIG_ANN}")
-        t0 = time.perf_counter()
-        _gen_big_emb(spark, BIG_EMB_N, BIG_EMB_DIM).write.mode("overwrite").parquet(emb_path)
-        emb = spark.read.parquet(emb_path)
-        meta = build_lsh_index(spark, emb, BIG_ANN, tables=8)
-        out["index_build_secs"] = round(time.perf_counter() - t0, 1)
-        out["planes"] = meta["planes"]
-    t0 = time.perf_counter()
-    idx = LshIndex(spark, BIG_ANN)
-    out["open_secs"] = round(time.perf_counter() - t0, 3)
-    out.setdefault("planes", idx.meta["planes"])
-    # derived from the OPENED index's recorded corpus size (meta["n"] — the
-    # store persists across runs, so the env knob may not describe it), not
-    # hardcoded absolutes: a SPARK_GRAFT_BIG_EMB_N below the default must
-    # not KeyError the brute truth.  Fractions land on the default's
-    # historical ids at N=1.4M (0, 7, 123456, ..., 1399999) so
-    # round-over-round numbers compare.
-    n_idx = int(idx.meta["n"])
-    out["n"] = n_idx  # what the layout actually holds, not the env knob
-    fracs = [0.0, 0.000005, 0.08818286, 0.22439929, 0.39682500,
-             0.55555500, 0.64373857, 0.79365071, 0.89285714, 0.99999929]
-    qids = sorted({min(n_idx - 1, round(f * n_idx)) for f in fracs})
-
-    # serving model: the caller holds the query vectors (topk_for_ids'
-    # fetch is a convenience full-slice scan, documented as such) — fetch
-    # once outside the query timer, then time the pruned topk() batches
-    from pyspark.sql import functions as F
-
-    t0 = time.perf_counter()
-    qrows = (
-        idx._df.filter((F.col("table_id") == 0) & F.col("vec_id").isin(qids))
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    out["qvec_fetch_secs"] = round(time.perf_counter() - t0, 3)
-    qs = [(int(r["vec_id"]), list(r["embedding"])) for r in qrows]
-
-    t0 = time.perf_counter()
-    got = idx.topk(qs, TOPK, radius=1).collect()
-    out["query10_cold_secs"] = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    got = idx.topk(qs, TOPK, radius=1).collect()
-    batch_s = time.perf_counter() - t0
-    out["query10_warm_secs"] = round(batch_s, 3)
-    out["per_query_warm_ms"] = round(batch_s / len(qids) * 1e3, 1)
-
-    # budgeted query-directed probing (the heavy-tail guard at scale):
-    # cap candidates/query via the occupancy sidecar + margin ordering.
-    # Recall for BOTH points is computed below against the same brute
-    # truth — the measured cost/recall tradeoff, not a narrated one.
-    BUDGET = 32000
-    t0 = time.perf_counter()
-    got_b = idx.topk(qs, TOPK, radius=1, budget=BUDGET).collect()
-    b_s = time.perf_counter() - t0
-    out["budget"] = BUDGET
-    out["query10_budget_secs"] = round(b_s, 3)
-    out["per_query_budget_ms"] = round(b_s / len(qids) * 1e3, 1)
-
-    # exact brute top-10 of the same parquet (numpy mapInPandas — the
-    # JVM-fold brute operator is the 500-row verification form, not a
-    # 14M-dot-product tool)
-    emb_df = spark.read.parquet(emb_path)
-    q_rows = {
-        int(r["vec_id"]): np.asarray(r["embedding"], dtype=np.float64)
-        for r in emb_df.where(emb_df.vec_id.isin(qids)).collect()
-    }
-    Q = np.stack([q_rows[q] for q in qids])
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-
-    def brute(batches):
-        for pdf in batches:
-            E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            En = E / np.maximum(np.linalg.norm(E, axis=1, keepdims=True), 1e-12)
-            S = En @ Qn.T  # (batch, q)
-            k = min(20, S.shape[0])
-            frames = []
-            for qi in range(S.shape[1]):
-                top = np.argpartition(-S[:, qi], k - 1)[:k]
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "qi": qi,
-                            "vec_id": pdf["vec_id"].to_numpy()[top],
-                            "cos": S[top, qi],
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    t0 = time.perf_counter()
-    part = spark.read.parquet(emb_path).mapInPandas(brute, "qi int, vec_id bigint, cos double").toPandas()
-    out["brute_scan_secs"] = round(time.perf_counter() - t0, 3)
-    truth: dict[int, set] = {}
-    for qi, qid in enumerate(qids):
-        g = part[part["qi"] == qi].sort_values(["cos", "vec_id"], ascending=[False, True])
-        truth[qid] = set(g["vec_id"].head(TOPK).tolist())
-
-    def _recall(rows) -> float:
-        by: dict[int, list] = {}
-        for r in rows:
-            by.setdefault(int(r["query_id"]), []).append(int(r["vec_id"]))
-        hits = sum(len(truth[q] & set(by.get(q, []))) for q in qids)
-        return round(hits / (len(qids) * TOPK), 3)
-
-    out["recall_at_10"] = _recall(got)
-    out["recall_at_10_budget"] = _recall(got_b)
-    return out
-
-
 def main_default() -> None:
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     spark = make_spark(CPUS)
     big_ft: dict = {}
-    big_ann: dict = {}
     try:
         times = run_default(spark, SF_DIR)
         if BIG_ENABLED:
@@ -677,10 +503,6 @@ def main_default() -> None:
                 big_ft = run_big_fulltext(spark)
             except Exception as e:  # pragma: no cover
                 big_ft = {"error": f"{type(e).__name__}: {e}"[:300]}
-            try:
-                big_ann = run_big_ann(spark)
-            except Exception as e:  # pragma: no cover
-                big_ann = {"error": f"{type(e).__name__}: {e}"[:300]}
     finally:
         spark.stop()
     qtimes = {k: v for k, v in times.items() if not k.startswith("_")}
@@ -703,7 +525,6 @@ def main_default() -> None:
         "compacted": times["_compacted"],
         "fulltext_secs": times.get("_fulltext", {}),
         "fulltext_1p4m": big_ft,
-        "ann_1p4m": big_ann,
         "steal": times.get("_steal", {}),
         "cpus": int(CPUS),
     }

@@ -123,13 +123,12 @@ FEATURE_SCHEMA = T.StructType(
 def extract_features(media: DataFrame) -> DataFrame:
     """Feature extraction over the opaque payload: a 16-bin histogram of
     byte high-nibbles — the deterministic stand-in for a real feature
-    kernel (spectrogram / embedding), with the REAL pipeline shape: numpy
+    kernel (e.g. a spectrogram), with the REAL pipeline shape: numpy
     over Arrow batches, one 1→BINS fan-out per payload, no shuffle.
 
     Output is normalized to (doc_id, bin, n) rows (bins with n=0 omitted)
     so the DuckDB oracle compares scalars, not arrays.  A real extractor
-    would swap the numpy kernel and emit a vector column feeding the
-    embeddings pipeline (operators/ann_index.py) unchanged.
+    would swap the numpy kernel and keep the same stage shape.
     """
     import numpy as np
 

@@ -1,5 +1,5 @@
 """DuckDB oracle SQL for the training-pipeline operators (dedup /
-similarity / text-stats / media).
+text-stats / media / keywords).
 
 Same conventions as oracle_sql.py: shared frozen specs (analyzer.sql_tokens,
 functions/hashing fragments, inlined MinHash constants), float outputs as
@@ -39,7 +39,6 @@ from .operators.media import FAKE_MIN_DIM, FAKE_W_MOD, FRAME_STEP, RESIZE_MAX_SI
 assert NGRAM_W == 3, "shingle SQL below is written for w=3"
 
 DOCS_SQL = "SELECT doc_id, text FROM documents"
-EMB_SQL = "SELECT vec_id, embedding FROM embeddings"
 
 
 def _shingles(toks: str) -> str:
@@ -274,258 +273,6 @@ WITH {_simhash_ctes(docs_sql)},
 SELECT a_id, b_id, hamming FROM pairs WHERE hamming <= {max_hamming}"""
 
 
-# -- similarity -------------------------------------------------------------
-
-def _dot(a: str, b: str) -> str:
-    """Sequential left fold in DOUBLE — bit-identical to the Spark fold."""
-    return (
-        f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        f"list_transform(list_zip({a}, {b}), "
-        f"s -> CAST(s[1] AS DOUBLE) * CAST(s[2] AS DOUBLE))), (acc, x) -> acc + x)"
-    )
-
-
-def _emb_ctes(emb_sql: str = EMB_SQL) -> str:
-    return f"""
-  emb AS ({emb_sql}),
-  en AS (SELECT vec_id, embedding, sqrt({_dot('embedding', 'embedding')}) AS nrm FROM emb)"""
-
-
-def ann_brute_sql(query_ids: list[int], k: int, emb_sql: str = EMB_SQL) -> str:
-    qs = ", ".join(str(q) for q in query_ids)
-    cos = f"{_dot('q.embedding', 'e.embedding')} / (q.nrm * e.nrm)"
-    return f"""
-WITH {_emb_ctes(emb_sql)},
-  q AS (SELECT * FROM en WHERE vec_id IN ({qs})),
-  scored AS (
-    SELECT q.vec_id AS query_id, e.vec_id AS vec_id,
-           CAST(round(({cos}) * 1e6) AS BIGINT) AS cos_micro
-    FROM q CROSS JOIN en e),
-  ranked AS (
-    SELECT query_id, vec_id, cos_micro,
-           CAST(row_number() OVER (PARTITION BY query_id ORDER BY cos_micro DESC, vec_id) AS INT) AS rank
-    FROM scored)
-SELECT query_id, vec_id, rank, cos_micro FROM ranked WHERE rank <= {k}"""
-
-
-def cosine_top_pairs_sql(n: int, emb_sql: str = EMB_SQL) -> str:
-    cos = f"{_dot('a.embedding', 'b.embedding')} / (a.nrm * b.nrm)"
-    return f"""
-WITH {_emb_ctes(emb_sql)}
-SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-       CAST(round(({cos}) * 1e6) AS BIGINT) AS cos_micro
-FROM en a JOIN en b ON a.vec_id < b.vec_id
-ORDER BY cos_micro DESC, a_id, b_id
-LIMIT {n}"""
-
-
-def _lsh_banded_sql(dim: int, tables: int, planes: int) -> str:
-    """Per-table sign-LSH bucket rows for every vector in ``en`` — ±1
-    plane literals from the pinned hash spec, sequential-fold projections
-    (bit-identical to the Spark JVM fold AND the engine's numpy fold
-    kernel, functions/npfold.py)."""
-    from .operators.similarity import _plane_signs
-
-    def bucket_expr(t: int) -> str:
-        terms = []
-        for p in range(planes):
-            arr = "[" + ", ".join(
-                "1.0" if s > 0 else "-1.0" for s in _plane_signs(dim, t, p)
-            ) + "]"
-            proj = _dot("embedding", arr)
-            terms.append(f"(CASE WHEN ({proj}) > 0 THEN {1 << p} ELSE 0 END)")
-        return "CAST(" + " + ".join(terms) + " AS BIGINT)"
-
-    return "\n    UNION ALL\n    ".join(
-        f"SELECT vec_id, {t} AS table_id, {bucket_expr(t)} AS bucket FROM en"
-        for t in range(tables)
-    )
-
-
-def _lsh_cand_ctes(dim: int, tables: int, planes: int, max_band_size: int) -> str:
-    """Banded sign-LSH candidate CTEs — the SAME banding as
-    similarity.lsh_candidate_pairs with the same band-size guard.
-    Expects an ``en`` CTE in scope."""
-    return f"""
-  banded AS (
-    {_lsh_banded_sql(dim, tables, planes)}),
-  kept AS (
-    SELECT * FROM (
-      SELECT vec_id, table_id, bucket,
-             count(*) OVER (PARTITION BY table_id, bucket) AS band_n
-      FROM banded)
-    WHERE band_n <= {max_band_size}),
-  cand AS (
-    SELECT DISTINCT x.vec_id AS a_id, y.vec_id AS b_id
-    FROM kept x
-    JOIN kept y ON x.table_id = y.table_id AND x.bucket = y.bucket
-               AND x.vec_id < y.vec_id)"""
-
-
-def lsh_top_pairs_sql(
-    n: int,
-    dim: int,
-    tables: int,
-    planes: int,
-    max_band_size: int,
-    emb_sql: str = EMB_SQL,
-) -> str:
-    """Mirror of similarity.cosine_top_pairs_lsh."""
-    cos = f"{_dot('a.embedding', 'b.embedding')} / (a.nrm * b.nrm)"
-    return f"""
-WITH {_emb_ctes(emb_sql)},{_lsh_cand_ctes(dim, tables, planes, max_band_size)}
-SELECT cand.a_id, cand.b_id,
-       CAST(round(({cos}) * 1e6) AS BIGINT) AS cos_micro
-FROM cand
-JOIN en a ON a.vec_id = cand.a_id
-JOIN en b ON b.vec_id = cand.b_id
-ORDER BY cos_micro DESC, a_id, b_id
-LIMIT {n}"""
-
-
-def lsh_near_dup_sql(
-    threshold: float,
-    dim: int,
-    tables: int,
-    planes: int,
-    max_band_size: int,
-    emb_sql: str = EMB_SQL,
-) -> str:
-    """Mirror of similarity.cosine_near_dup_pairs (threshold form)."""
-    cos = f"{_dot('a.embedding', 'b.embedding')} / (a.nrm * b.nrm)"
-    return f"""
-WITH {_emb_ctes(emb_sql)},{_lsh_cand_ctes(dim, tables, planes, max_band_size)}
-SELECT * FROM (
-  SELECT cand.a_id, cand.b_id,
-         CAST(round(({cos}) * 1e6) AS BIGINT) AS cos_micro
-  FROM cand
-  JOIN en a ON a.vec_id = cand.a_id
-  JOIN en b ON b.vec_id = cand.b_id)
-WHERE cos_micro >= {int(round(threshold * 1e6))}"""
-
-
-def lsh_index_topk_sql(
-    query_ids: list[int],
-    k: int,
-    dim: int,
-    tables: int,
-    planes: int,
-    radius: int = 1,
-    emb_sql: str = EMB_SQL,
-    exclude_pred: str | None = None,
-) -> str:
-    """Mirror of the PERSISTED multi-probe LSH index query
-    (operators/ann_index.LshIndex.topk over a build_lsh_index layout):
-    per-table query buckets through the same plane fold, expanded to all
-    buckets within Hamming ``radius`` via inlined XOR masks
-    (ann_index._probe_masks), candidates DISTINCT per (query, vec), exact
-    cosine rerank, rank = (cos_micro DESC, vec_id ASC).
-
-    The build writes every row (no band guard — unlike the pair-mining
-    banding), so ``banded`` is used unguarded here.
-
-    ``exclude_pred`` (a SQL predicate on ``vec_id``) mirrors serve-time
-    tombstones (LshIndex.topk ``deleted``): excluded ids can neither be
-    queries nor candidates."""
-    from .operators.ann_index import _probe_masks
-
-    masks = ", ".join(str(m) for m in _probe_masks(planes, radius))
-    qs = ", ".join(str(q) for q in query_ids)
-    q_excl = f" AND NOT ({exclude_pred})" if exclude_pred else ""
-    c_excl = (
-        f" WHERE NOT ({exclude_pred.replace('vec_id', 'b.vec_id')})"
-        if exclude_pred
-        else ""
-    )
-    cos = f"{_dot('q.embedding', 'e.embedding')} / (q.nrm * e.nrm)"
-    return f"""
-WITH {_emb_ctes(emb_sql)},
-  banded AS (
-    {_lsh_banded_sql(dim, tables, planes)}),
-  qb AS (
-    SELECT vec_id AS query_id, table_id, bucket
-    FROM banded WHERE vec_id IN ({qs}){q_excl}),
-  probes AS (
-    SELECT DISTINCT query_id, table_id, xor(bucket, CAST(m.mask AS BIGINT)) AS bucket
-    FROM qb CROSS JOIN (SELECT unnest([{masks}]) AS mask) m),
-  cand AS (
-    SELECT DISTINCT p.query_id, b.vec_id
-    FROM probes p
-    JOIN banded b ON b.table_id = p.table_id AND b.bucket = p.bucket{c_excl}),
-  scored AS (
-    SELECT c.query_id, c.vec_id,
-           CAST(round(({cos}) * 1e6) AS BIGINT) AS cos_micro
-    FROM cand c
-    JOIN en q ON q.vec_id = c.query_id
-    JOIN en e ON e.vec_id = c.vec_id),
-  ranked AS (
-    SELECT query_id, vec_id, cos_micro,
-           CAST(row_number() OVER (
-             PARTITION BY query_id ORDER BY cos_micro DESC, vec_id) AS INT) AS rank
-    FROM scored)
-SELECT query_id, vec_id, rank, cos_micro FROM ranked WHERE rank <= {k}"""
-
-
-def ivf_topk_sql(
-    query_ids: list[int],
-    k: int,
-    centroids: list[list[float]],
-    nprobe: int,
-    emb_sql: str = EMB_SQL,
-) -> str:
-    """Mirror of the persisted IVF index query (operators/ivf_index
-    .IvfIndex.topk): ``centroids`` is the PINNED centroid matrix — a pure,
-    reproducible function of the corpus (hash-strided sample + fixed-round
-    numpy k-means, ivf_index.centroids_py re-derives it without Spark) —
-    inlined as a VALUES table.  Cell assignment / probe ranking use raw
-    dot products (argmax is scale-invariant; the engine does the same,
-    fold order pinned), ties broken on centroid id; rerank is exact
-    cosine, rank = (cos_micro DESC, vec_id ASC)."""
-    rows = ",\n      ".join(
-        "(" + str(ci) + ", [" + ", ".join(repr(float(x)) for x in c) + "]::DOUBLE[])"
-        for ci, c in enumerate(centroids)
-    )
-    qs = ", ".join(str(q) for q in query_ids)
-    cos = f"{_dot('q.embedding', 'e.embedding')} / (q.nrm * e.nrm)"
-    return f"""
-WITH {_emb_ctes(emb_sql)},
-  cent AS (
-    SELECT * FROM (VALUES
-      {rows}) AS t(cid, cvec)),
-  assign AS (
-    SELECT vec_id, cid FROM (
-      SELECT e.vec_id, c.cid,
-             row_number() OVER (
-               PARTITION BY e.vec_id
-               ORDER BY {_dot('e.embedding', 'c.cvec')} DESC, c.cid) AS rn
-      FROM en e CROSS JOIN cent c)
-    WHERE rn = 1),
-  qprobe AS (
-    SELECT query_id, cid FROM (
-      SELECT q.vec_id AS query_id, c.cid,
-             row_number() OVER (
-               PARTITION BY q.vec_id
-               ORDER BY {_dot('q.embedding', 'c.cvec')} DESC, c.cid) AS rn
-      FROM en q CROSS JOIN cent c
-      WHERE q.vec_id IN ({qs}))
-    WHERE rn <= {nprobe}),
-  cand AS (
-    SELECT DISTINCT p.query_id, a.vec_id
-    FROM qprobe p JOIN assign a ON a.cid = p.cid),
-  scored AS (
-    SELECT c.query_id, c.vec_id,
-           CAST(round(({cos}) * 1e6) AS BIGINT) AS cos_micro
-    FROM cand c
-    JOIN en q ON q.vec_id = c.query_id
-    JOIN en e ON e.vec_id = c.vec_id),
-  ranked AS (
-    SELECT query_id, vec_id, cos_micro,
-           CAST(row_number() OVER (
-             PARTITION BY query_id ORDER BY cos_micro DESC, vec_id) AS INT) AS rank
-    FROM scored)
-SELECT query_id, vec_id, rank, cos_micro FROM ranked WHERE rank <= {k}"""
-
-
 # -- text stats -------------------------------------------------------------
 
 def token_counts_sql(docs_sql: str = DOCS_SQL) -> str:
@@ -637,45 +384,6 @@ SELECT doc_id,
        fi AS frame_idx,
        {h32_sql(f"substring(text, fi * {FRAME_STEP} * 64 + 1, 64)")} AS frame_h32
 FROM frames"""
-
-
-# ---------------------------------------------------------------------------
-# Hybrid retrieval (BM25 ∪ cosine, RRF fusion — operators/hybrid.py)
-# ---------------------------------------------------------------------------
-
-def hybrid_rrf_sql(
-    query_text: str,
-    query_vec_id: int,
-    kb: int,
-    kc: int,
-    k: int,
-    k0: int = 60,
-    emb_sql: str = EMB_SQL,
-) -> str:
-    """DuckDB mirror of ``rrf_fuse_two(bm25_topk, ann_brute_topk)``.
-
-    Same fixed-order double arithmetic as the engine: one reciprocal per
-    retriever added in a FULL OUTER JOIN row (never a float reduce over an
-    arbitrary-order list), micro-rounded, ties on doc_id ASC.
-    """
-    from .oracle_sql import bm25_topk_sql
-
-    bm = bm25_topk_sql(query_text, kb)
-    cs = ann_brute_sql([query_vec_id], kc, emb_sql=emb_sql)
-    return f"""
-WITH bm AS ({bm}),
-  cs AS ({cs}),
-  fused AS (
-    SELECT COALESCE(bm.doc_id, cs.vec_id) AS doc_id,
-           CAST(round(1e6 * (COALESCE(1.0 / ({k0} + bm.rank), 0)
-                           + COALESCE(1.0 / ({k0} + cs.rank), 0))) AS BIGINT)
-             AS rrf_micro
-    FROM bm FULL OUTER JOIN cs ON bm.doc_id = cs.vec_id),
-  ranked AS (
-    SELECT doc_id, rrf_micro,
-           CAST(row_number() OVER (ORDER BY rrf_micro DESC, doc_id) AS INT) AS rank
-    FROM fused)
-SELECT doc_id, rank, rrf_micro FROM ranked WHERE rank <= {k}"""
 
 
 # ---------------------------------------------------------------------------

@@ -72,39 +72,6 @@ def test_make_blocks(seed):
         off += m
 
 
-def test_npfold_kernels_equal_scalar_fold():
-    """fold_dot / fold_norm must equal the per-row scalar left fold EXACTLY
-    (they are its vectorization, not an approximation) — hypothesis-style
-    sweep over shapes including 0/1-dim edges."""
-    import numpy as np
-
-    from search_spark.functions.npfold import fold_dot, fold_norm
-
-    rng = np.random.default_rng(11)
-    for n, m, d in [(1, 1, 1), (3, 2, 5), (17, 4, 64), (5, 3, 33), (2, 2, 0)]:
-        E = rng.standard_normal((n, d))
-        W = rng.standard_normal((m, d))
-        got = fold_dot(E, W)
-        want = np.empty((n, m))
-        for i in range(n):
-            for j in range(m):
-                acc = 0.0
-                for x in range(d):
-                    acc = acc + float(E[i, x]) * float(W[j, x])
-                want[i, j] = acc
-        assert np.array_equal(got, want), (n, m, d)
-        gn = fold_norm(E)
-        wn = np.empty(n)
-        for i in range(n):
-            acc = 0.0
-            for x in range(d):
-                acc = acc + float(E[i, x]) * float(E[i, x])
-            import math
-
-            wn[i] = math.sqrt(acc)  # IEEE sqrt == np.sqrt; x**0.5 (pow) can differ 1 ulp
-        assert np.array_equal(gn, wn), (n, d)
-
-
 def test_encode_runs_identical_to_make_blocks():
     """The whole-batch vectorized encoder must be BYTE-identical to the
     per-run make_blocks assembly it replaced, over fuzzed multi-run

@@ -97,6 +97,24 @@ def test_package_pyfiles(tmp_path):
     assert "search_spark/operators/wand.py" in names
     assert not any("__pycache__" in n for n in names)
 
+    # every public facade name resolves from the zip alone (a name left
+    # pointing at a module the zip no longer ships fails here)
+    probe = subprocess.run(
+        [
+            sys.executable,
+            "-c",
+            "import search_spark as s\n"
+            "assert s.__file__.startswith(%r), s.__file__\n"
+            "for n in s._FACADE:\n"
+            "    getattr(s, n)\n" % str(out),
+        ],
+        capture_output=True,
+        text=True,
+        cwd=tmp_path,
+        env={**os.environ, "PYTHONPATH": str(out)},
+    )
+    assert probe.returncode == 0, probe.stderr[-2000:]
+
 
 def test_submit_build_then_query(tmp_path):
     """The actual cluster entry points, driven as subprocesses (local master):

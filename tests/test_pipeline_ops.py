@@ -1,7 +1,7 @@
-"""Unit tests for the training-pipeline operators (dedup / similarity /
-text stats / media) — spec-level agreement across the three
+"""Unit tests for the training-pipeline operators (dedup / text stats /
+media / clustering) — spec-level agreement across the three
 implementations (Python / Spark Column / DuckDB SQL) plus behavior checks
-the driver's oracle gate can't see (LSH recall, stub seams).
+a row-level oracle comparison can't see (band guards, stub seams).
 
 The full Spark-vs-DuckDB comparison of every operator runs in
 tests/test_entry_contract.py at sf0.01."""
@@ -22,8 +22,7 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture(scope="module")
 def ddb():
     con = duckdb.connect()
-    for t in ("documents", "embeddings"):
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')")
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{SF}/documents.parquet')")
     return con
 
 
@@ -88,155 +87,6 @@ def test_bpe_count_spec():
     assert TS.bpe_count_py([]) == 0
     assert TS.bpe_count_py(["ab"]) == 1
     assert TS.bpe_count_py(["abcd", "abcde"]) == 1 + 2
-
-
-def test_ann_lsh_recall_vs_brute(spark):
-    """Pin the observed recall of the bucketed path on the fixed corpus —
-    deterministic (seeded data + pinned planes), so exact assertion."""
-    from search_spark.operators.similarity import ann_brute_topk, ann_lsh_topk
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
-    qids = [0, 1, 2, 3, 4]
-    brute = {
-        (r["query_id"], r["vec_id"]) for r in ann_brute_topk(emb, qids, 10).collect()
-    }
-    lsh = {
-        (r["query_id"], r["vec_id"]) for r in ann_lsh_topk(emb, qids, 10).collect()
-    }
-    # every LSH hit must be a true neighbor of its query's bucket → subset of
-    # the corpus; self-match always survives (query is in its own bucket)
-    assert {(q, q) for q in qids} <= lsh
-    recall = len(brute & lsh) / len(brute)
-    assert recall >= 0.3, recall  # bucketing to 1/256 of corpus keeps ≥30% here
-
-
-def test_persisted_lsh_index_recall_and_pruning(spark, tmp_path):
-    """The serving ANN path (persisted (table_id, bucket) layout +
-    multi-probe): recall@10 ≥ 0.9 vs brute at sf0.01, partition filters in
-    the scan, and bucket assignment identical between build and query."""
-    from search_spark.operators.ann_index import LshIndex, build_lsh_index
-    from search_spark.operators.similarity import ann_brute_topk
-
-    sf = "/root/testdata/sf0.01"
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet").select("vec_id", "embedding")
-    meta = build_lsh_index(spark, emb, str(tmp_path / "lsh"), tables=8)
-    assert meta["planes"] == 4  # auto_planes(500, 256)
-    idx = LshIndex(spark, str(tmp_path / "lsh"))
-
-    qids = [0, 1, 2, 3, 4]
-    res = idx.topk_for_ids(qids, 10, radius=1)
-    brute = {
-        (r["query_id"], r["vec_id"]) for r in ann_brute_topk(emb, qids, 10).collect()
-    }
-    got = {(r["query_id"], r["vec_id"]) for r in res.collect()}
-    recall = len(brute & got) / len(brute)
-    assert recall >= 0.9, recall
-
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "table_id" in plan
-
-
-def test_lsh_budgeted_all_probes_empty_returns_empty(spark, tmp_path):
-    """Budgeted expansion skips empty buckets; a query whose ENTIRE probe
-    set is empty (out-of-corpus vector over a sparse layout) must return
-    an empty frame, not crash building the probe predicate."""
-    import numpy as np
-    import pandas as pd
-
-    from search_spark.operators.ann_index import LshIndex, build_lsh_index
-
-    # 5 identical vectors → exactly one populated bucket per table
-    v = np.ones(16, dtype=np.float32)
-    emb = spark.createDataFrame(
-        pd.DataFrame(
-            {"vec_id": np.arange(5, dtype=np.int64), "embedding": [v.tolist()] * 5}
-        )
-    )
-    # planes=8: -v's bucket and all its radius-1 flips sit ≥ 7 bits from
-    # the one populated bucket per table → every probe lands empty
-    build_lsh_index(spark, emb, str(tmp_path / "lsh"), tables=4, planes=8)
-    idx = LshIndex(spark, str(tmp_path / "lsh"))
-    res = idx.topk([(99, (-v).tolist())], k=5, radius=1, budget=100)
-    assert res.count() == 0
-    assert res.columns == ["query_id", "vec_id", "rank", "cos_micro"]
-    # same query unbudgeted goes through the full-expansion path (no
-    # sidecar consult) and must also come back empty-but-well-formed
-    assert idx.topk([(99, (-v).tolist())], k=5, radius=1).count() == 0
-
-
-def test_persisted_ivf_index_recall_and_pruning(spark, tmp_path):
-    """IVF ANN (coarse-quantizer alternative to sign-LSH): deterministic
-    sample-fit k-means cells, partition-pruned nprobe scan, exact rerank.
-    Clustered data → near-perfect recall probing few cells; the flat
-    sf0.01 corpus (no cluster structure) gets a looser pin."""
-    import numpy as np
-    import pandas as pd
-
-    from search_spark.operators.ivf_index import IvfIndex, build_ivf_index
-    from search_spark.operators.similarity import ann_brute_topk
-
-    # clustered synthetic (seeded): the regime IVF exists for
-    rng = np.random.default_rng(42)
-    N, DIM = 3000, 32
-    centers = rng.standard_normal((30, DIM))
-    M = centers[rng.integers(0, 30, N)] + 0.4 * rng.standard_normal((N, DIM))
-    emb = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "vec_id": np.arange(N, dtype=np.int64),
-                "embedding": [r.astype(np.float32).tolist() for r in M],
-            }
-        )
-    )
-    meta = build_ivf_index(spark, emb, str(tmp_path / "ivf"))
-    idx = IvfIndex(spark, str(tmp_path / "ivf"))
-    qids = [0, 1, 2]
-    nrm = np.sqrt((M * M).sum(1))
-    Cs = (M[qids] @ M.T) / (nrm[qids][:, None] * nrm[None, :])
-    truth = {q: set(np.argsort(-Cs[i])[:10].tolist()) for i, q in enumerate(qids)}
-    res = idx.topk_for_ids(qids, 10, nprobe=4)
-    got = {}
-    for r in res.collect():
-        got.setdefault(r["query_id"], set()).add(r["vec_id"])
-    rec = sum(len(got.get(q, set()) & truth[q]) / 10 for q in qids) / len(qids)
-    assert rec >= 0.9, rec
-    assert 4 < meta["nlist"]  # actually pruning, not scanning everything
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "centroid" in plan
-
-    # the flat-embedding fixture: structure-free, looser deterministic pin
-    sf_emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    build_ivf_index(spark, sf_emb, str(tmp_path / "ivf2"))
-    idx2 = IvfIndex(spark, str(tmp_path / "ivf2"))
-    brute = {
-        (r["query_id"], r["vec_id"])
-        for r in ann_brute_topk(sf_emb, [0, 1, 2, 3, 4], 10).collect()
-    }
-    got2 = {
-        (r["query_id"], r["vec_id"])
-        for r in idx2.topk_for_ids([0, 1, 2, 3, 4], 10, nprobe=8).collect()
-    }
-    assert len(brute & got2) / len(brute) >= 0.5
-
-
-def test_lsh_top_pairs_no_cartesian_and_coverage(spark):
-    """Serving top-pairs: no cartesian in the physical plan; coverage of
-    the exact brute top-50 is pinned (deterministic banding)."""
-    from search_spark.operators.similarity import cosine_top_pairs, cosine_top_pairs_lsh
-
-    sf = "/root/testdata/sf0.01"
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet").select("vec_id", "embedding")
-    served = cosine_top_pairs_lsh(emb, 50, dim=64, tables=8, planes=4)
-    plan = served._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
-
-    brute = {(r["a_id"], r["b_id"]) for r in cosine_top_pairs(emb, 50).collect()}
-    got = {(r["a_id"], r["b_id"]) for r in served.collect()}
-    # moderate-similarity corpus: 8×4 banding covers most but not all of
-    # the exact top-50 (measured 38/50 — deterministic, pinned loosely)
-    assert len(brute & got) / len(brute) >= 0.7
 
 
 def test_dedup_band_guard_survives_identical_flood(spark):
@@ -309,27 +159,6 @@ def test_auto_cap_floor_keeps_neardups_on_unique_corpus(spark):
 
     pairs = ngram_jaccard_pairs(docs).collect()  # DEFAULT auto cap
     assert {(r["a_id"], r["b_id"]) for r in pairs} == {(9001, 9002)}
-
-
-def test_band_size_guard_bounds_duplicate_floods(spark):
-    """An all-duplicates corpus (5k identical vectors) must NOT create an
-    unbounded quadratic band group: with max_band_size below the flood the
-    candidate set is empty and the job completes fast."""
-    import numpy as np
-
-    from search_spark.operators.similarity import lsh_candidate_pairs
-
-    rng = np.random.default_rng(7)
-    base = [float(x) for x in rng.standard_normal(8)]
-    rows = [(i, base) for i in range(5000)] + [
-        (5000 + i, [float(x) for x in rng.standard_normal(8)]) for i in range(20)
-    ]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    cand = lsh_candidate_pairs(emb, dim=8, tables=2, planes=4, max_band_size=100)
-    ids = {r["a_id"] for r in cand.collect()} | {r["b_id"] for r in cand.collect()}
-    # the 5k-identical flood is dropped by the guard; only the 20 random
-    # vectors (band groups ≤ 100) may pair up
-    assert all(i >= 5000 for i in ids)
 
 
 def test_spearman_average_rank_matches_pandas(spark, ddb):
@@ -416,65 +245,6 @@ def test_capped_ngram_broadcasts_head_not_tail(spark):
     assert sorted(map(tuple, kept_inner.collect())) == sorted(map(tuple, kept_anti.collect()))
 
 
-def test_npfold_matches_jvm_fold_bitwise(spark):
-    """The numpy sequential-fold kernels must equal the JVM fold
-    (F.aggregate over F.zip_with) BIT-FOR-BIT — that identity is what lets
-    the persisted ANN indexes carry exact DuckDB oracles (the reference
-    pins kernel-vs-scalar agreement the same way, simd_test.go:52-74)."""
-    import numpy as np
-
-    from search_spark.functions.npfold import fold_dot, fold_dot_pairs, fold_norm
-    from search_spark.operators.similarity import dot_col, norm_col
-    from pyspark.sql import functions as F
-
-    rng = np.random.default_rng(7)
-    A = rng.standard_normal((50, 64)).astype(np.float32)
-    B = rng.standard_normal((1, 64)).astype(np.float32)
-    df = spark.createDataFrame(
-        [(i, a.tolist(), B[0].tolist()) for i, a in enumerate(A)],
-        "i int, a array<float>, b array<float>",
-    )
-    rows = df.select(
-        "i", dot_col(F.col("a"), F.col("b")).alias("d"), norm_col(F.col("a")).alias("n")
-    ).collect()
-    want_d = fold_dot(A.astype(np.float64), B.astype(np.float64))[:, 0]
-    want_n = fold_norm(A.astype(np.float64))
-    # the row-paired rerank kernel must agree with both forms bit-for-bit
-    want_p = fold_dot_pairs(
-        A.astype(np.float64), np.repeat(B.astype(np.float64), len(A), axis=0)
-    )
-    assert (want_p == want_d).all()
-    for r in rows:
-        assert r["d"] == want_d[r["i"]], (r["d"], want_d[r["i"]])
-        assert r["n"] == want_n[r["i"]]
-
-
-def test_ivf_centroids_py_twin_matches_build(spark, tmp_path):
-    """centroids_py (the oracle-side no-Spark twin) must reproduce the
-    centroid matrix build_ivf_index trains — the pinned-centroid IVF
-    oracle depends on this bit-identity."""
-    import json
-
-    import numpy as np
-
-    from search_spark.operators.ivf_index import build_ivf_index, centroids_py
-
-    sf = "/root/testdata/sf0.01"
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet").select("vec_id", "embedding")
-    build_ivf_index(spark, emb, str(tmp_path / "ivf"))
-    with open(tmp_path / "ivf" / "_ivf_meta.json") as f:
-        stored = np.asarray(json.load(f)["centroids"], dtype=np.float64)
-
-    import duckdb
-
-    rows = duckdb.connect().execute(
-        f"SELECT vec_id, embedding FROM read_parquet('{sf}/embeddings.parquet')"
-    ).fetchall()
-    twin = centroids_py(rows)
-    assert stored.shape == twin.shape
-    assert np.array_equal(stored, twin)
-
-
 def test_xxhash64_py_matches_spark(spark):
     """The layout hash twin: xxhash64_py must equal F.xxhash64 bit-for-bit
     (the dictionary-lookup partition pruning rides on this)."""
@@ -525,7 +295,7 @@ def test_dup_clusters_twophase_vs_propagation_vs_unionfind(spark):
     """Cross-algorithm equivalence on seeded random graphs: the two-phase
     large-star/small-star default, the min-label-propagation twin, and a
     pure-Python union-find must produce identical labelings (the same
-    doctrine as the npfold/JVM-fold and SIMD/scalar kernel twins)."""
+    doctrine as the SIMD/scalar kernel twins)."""
     import random
 
     from search_spark.operators.cluster import dup_clusters, dup_clusters_propagation
@@ -625,87 +395,3 @@ def test_dictionary_lookup_partition_pruned(spark, tmp_path):
     # invariant raises on mismatch)
     rows = reader._dictionary_rows(terms)
     assert set(rows) == set(terms)
-
-
-def test_rrf_fuse_two_semantics(spark):
-    """RRF fusion: both-lists docs sum reciprocals, single-list docs get
-    one term, ties break on doc_id ASC, k truncates."""
-    from search_spark.operators.hybrid import RRF_K0, rrf_fuse_two
-
-    bm = spark.createDataFrame([(10, 1), (20, 2), (30, 3)], "doc_id long, rank int")
-    cs = spark.createDataFrame([(20, 1), (40, 2), (50, 3)], "doc_id long, rank int")
-    got = {
-        r["doc_id"]: (r["rank"], r["rrf_micro"])
-        for r in rrf_fuse_two(bm, cs, k=4).collect()
-    }
-    mk = lambda *rs: round(1e6 * sum(1.0 / (RRF_K0 + r) for r in rs))
-    # doc 20 in both lists -> top; then 10 (bm rank1) ties 40 (cs rank2)?
-    assert got[20] == (1, mk(2, 1))
-    assert got[10][1] == mk(1) and got[40][1] == mk(2)
-    # equal-micro docs order by doc_id ASC
-    pairs = sorted(got.items(), key=lambda kv: kv[1][0])
-    micros = [m for _, (_, m) in pairs]
-    assert micros == sorted(micros, reverse=True)
-    for (d1, (r1, m1)), (d2, (r2, m2)) in zip(pairs, pairs[1:]):
-        if m1 == m2:
-            assert d1 < d2
-    assert len(got) == 4  # k truncation
-
-
-def test_rrf_exclude_drops_from_both_lists(spark):
-    from search_spark.operators.hybrid import rrf_fuse_two
-
-    bm = spark.createDataFrame([(1, 1), (2, 2), (3, 3)], "doc_id long, rank int")
-    cs = spark.createDataFrame([(2, 1), (4, 2)], "doc_id long, rank int")
-    out = {r["doc_id"] for r in rrf_fuse_two(bm, cs, k=10, exclude=frozenset({2, 4})).collect()}
-    assert out == {1, 3}  # 2 gone from both lists, 4 from the ANN side
-    base = {r["doc_id"] for r in rrf_fuse_two(bm, cs, k=10).collect()}
-    assert base == {1, 2, 3, 4}
-
-
-def test_ann_serving_paths_exclude_tombstones(spark, tmp_path):
-    """A deleted vec_id never surfaces from ANY similarity serving path:
-    persisted LSH, persisted IVF, brute, ephemeral LSH, and pair mining
-    (reference contract analogue: results must reflect the live corpus,
-    /root/reference/index.go:63-86).  Deleted ids are also unservable as
-    queries."""
-    from search_spark.operators.ann_index import LshIndex, build_lsh_index
-    from search_spark.operators.ivf_index import IvfIndex, build_ivf_index
-    from search_spark.operators.similarity import (
-        ann_brute_topk,
-        ann_lsh_topk,
-        cosine_top_pairs,
-        cosine_top_pairs_lsh,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select("vec_id", "embedding")
-    n = emb.count()
-    deleted = frozenset(v for v in range(int(n)) if v % 7 == 3)
-    qids = [0, 1, 2, 3, 4]  # qid 3 is deleted → must vanish as a query too
-    live_q = [q for q in qids if q not in deleted]
-
-    build_lsh_index(spark, emb, str(tmp_path / "lsh"), tables=8)
-    build_ivf_index(spark, emb, str(tmp_path / "ivf"))
-    lsh = LshIndex(spark, str(tmp_path / "lsh"))
-    ivf = IvfIndex(spark, str(tmp_path / "ivf"))
-
-    frames = {
-        "lsh": lsh.topk_for_ids(qids, 10, radius=1, deleted=deleted),
-        "ivf": ivf.topk_for_ids(qids, 10, nprobe=8, deleted=deleted),
-        "brute": ann_brute_topk(emb, qids, 10, deleted=deleted),
-        "ephemeral": ann_lsh_topk(emb, qids, 10, deleted=deleted),
-    }
-    for name, df in frames.items():
-        rows = df.collect()
-        assert rows, name  # live queries still get results
-        assert not {r["vec_id"] for r in rows} & deleted, name
-        assert {r["query_id"] for r in rows} <= set(live_q), name
-
-    for pairs in (
-        cosine_top_pairs(emb, 25, deleted=deleted),
-        cosine_top_pairs_lsh(emb, 25, deleted=deleted),
-    ):
-        rows = pairs.collect()
-        assert rows
-        ids = {r["a_id"] for r in rows} | {r["b_id"] for r in rows}
-        assert not ids & deleted
