@@ -59,12 +59,16 @@ def varint_encode(values: np.ndarray) -> bytes:
     return buf[mask].tobytes()
 
 
-def varint_decode(data: bytes) -> np.ndarray:
-    """Decode an LEB128 stream back to uint64 (vectorized)."""
-    if not data:
-        return np.zeros(0, dtype=np.uint64)
+def varint_decode(data) -> np.ndarray:
+    """Decode an LEB128 stream back to uint64 (vectorized).  ``data`` is
+    any bytes-like buffer (bytes, a uint8 array, an Arrow buffer slice); a
+    trailing value whose last byte is missing is dropped, so callers that
+    know the value count detect truncation by comparing it."""
     arr = np.frombuffer(data, dtype=np.uint8)
     ends = np.flatnonzero((arr & 0x80) == 0)
+    if ends.shape[0] == 0:
+        return np.zeros(0, dtype=np.uint64)
+    arr = arr[: ends[-1] + 1]
     starts = np.empty_like(ends)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1

@@ -31,12 +31,12 @@ drop out of their clause.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..analyzer import tokenize
-from .wand import _topk_plan, decode_term, tombstones_ref
+from .wand import _topk_plan, decode_blocks, deleted_array, drop_deleted, tombstones_ref
 
 
 def matching_doc_ids(reader, terms: list[str], mode: str = "all") -> DataFrame | None:
@@ -45,8 +45,9 @@ def matching_doc_ids(reader, terms: list[str], mode: str = "all") -> DataFrame |
 
     Returns (doc_bucket, doc_id); None when no doc can match (``all``
     with an OOV term, or ``any`` with every term OOV).  Same plan as
-    phrase.conjunctive_doc_ids: pruned scan → one exchange → numpy
-    per-bucket set algebra.
+    phrase.conjunctive_doc_ids: pruned scan → one exchange
+    (``IndexReader.map_buckets``) → per-bucket :func:`wand.decode_blocks`
+    + numpy set algebra.
     """
     uniq = sorted(set(terms))
     dict_rows = reader._dictionary_rows(uniq)
@@ -60,9 +61,8 @@ def matching_doc_ids(reader, terms: list[str], mode: str = "all") -> DataFrame |
     conj = mode == "all"
     deleted_small, deleted_bc = tombstones_ref(reader)
 
-    def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-        deleted = deleted_bc.value if deleted_bc is not None else deleted_small
-        per_term = [decode_term(g)[0] for _, g in pdf.groupby("term")]
+    def combine(table: pa.Table) -> pa.Table:
+        per_term = [ids for ids, _, _ in decode_blocks(table).values()]
         if conj:
             if len(per_term) < n_terms:
                 acc = np.empty(0, dtype=np.int64)
@@ -75,12 +75,12 @@ def matching_doc_ids(reader, terms: list[str], mode: str = "all") -> DataFrame |
                         break
         else:
             acc = np.unique(np.concatenate(per_term))
-        if deleted and acc.shape[0]:
-            acc = acc[~np.isin(acc, np.fromiter(deleted, dtype=np.int64))]
-        return pd.DataFrame(
+        acc = drop_deleted(acc, deleted_array(deleted_small, deleted_bc))
+        bucket = table.column("doc_bucket")[0].as_py()
+        return pa.table(
             {
-                "doc_bucket": np.full(acc.shape[0], int(pdf["doc_bucket"].iloc[0]), dtype=np.int32),
-                "doc_id": acc,
+                "doc_bucket": pa.array(np.full(acc.shape[0], bucket, dtype=np.int32)),
+                "doc_id": pa.array(acc, pa.int64()),
             }
         )
 

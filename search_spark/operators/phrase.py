@@ -44,10 +44,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .. import codec
 from ..analyzer import tokenize
 from ..functions.bm25 import term_score_col
 from ..functions.positional import (
@@ -58,7 +58,7 @@ from ..functions.positional import (
     phrase_tf_np,
 )
 from ..oracle import idf as oracle_idf
-from .wand import decode_term, tombstones_ref
+from .wand import decode_blocks, deleted_array, drop_deleted, tombstones_ref
 
 #: broadcast the candidate side of the verify join only below this many
 #: candidate docs (driver-side count; above it fall back to a shuffled
@@ -115,8 +115,9 @@ def conjunctive_doc_ids(reader, terms: list[str]) -> DataFrame | None:
 
     Returns (doc_bucket, doc_id) or None when any term is OOV (no doc can
     match).  One pruned scan + one exchange sized to the true bucket
-    count; per bucket the decode is the same numpy varint path the BM25
-    kernel uses, and the intersection is sorted-array ``np.intersect1d``.
+    count (``IndexReader.map_buckets``); per bucket the decode is the BM25
+    kernel's :func:`wand.decode_blocks`, and the intersection is
+    sorted-array ``np.intersect1d``.
     """
     uniq = sorted(set(terms))
     dict_rows = reader._dictionary_rows(uniq)
@@ -126,36 +127,23 @@ def conjunctive_doc_ids(reader, terms: list[str]) -> DataFrame | None:
     n_terms = len(uniq)
     deleted_small, deleted_bc = tombstones_ref(reader)
 
-    def intersect(pdf: pd.DataFrame) -> pd.DataFrame:
-        deleted = deleted_bc.value if deleted_bc is not None else deleted_small
-        per_term = []
-        for _, g in pdf.groupby("term"):
-            ids = np.concatenate(
-                [
-                    codec.decode_doc_ids(ids_b, int(first), int(n))
-                    for ids_b, first, n in zip(
-                        g["doc_ids_delta"], g["first_doc"], g["n_docs"]
-                    )
-                ]
-            )
-            per_term.append(ids)
-        if len(per_term) < n_terms:
-            return pd.DataFrame({"doc_bucket": [], "doc_id": []}).astype(
-                {"doc_bucket": "int32", "doc_id": "int64"}
-            )
-        # rarest-first: intersections only shrink, so start smallest
-        per_term.sort(key=len)
-        acc = per_term[0]
-        for ids in per_term[1:]:
-            acc = np.intersect1d(acc, ids, assume_unique=True)
-            if acc.shape[0] == 0:
-                break
-        if deleted and acc.shape[0]:
-            acc = acc[~np.isin(acc, np.fromiter(deleted, dtype=np.int64))]
-        return pd.DataFrame(
+    def intersect(table: pa.Table) -> pa.Table:
+        per_term = [ids for ids, _, _ in decode_blocks(table).values()]
+        acc = np.empty(0, dtype=np.int64)
+        if len(per_term) == n_terms:
+            # rarest-first: intersections only shrink, so start smallest
+            per_term.sort(key=len)
+            acc = per_term[0]
+            for ids in per_term[1:]:
+                acc = np.intersect1d(acc, ids, assume_unique=True)
+                if acc.shape[0] == 0:
+                    break
+            acc = drop_deleted(acc, deleted_array(deleted_small, deleted_bc))
+        bucket = table.column("doc_bucket")[0].as_py()
+        return pa.table(
             {
-                "doc_bucket": np.full(acc.shape[0], int(pdf["doc_bucket"].iloc[0]), dtype=np.int32),
-                "doc_id": acc,
+                "doc_bucket": pa.array(np.full(acc.shape[0], bucket, dtype=np.int32)),
+                "doc_id": pa.array(acc, pa.int64()),
             }
         )
 
@@ -506,11 +494,10 @@ def _pseudo_term_batch(
         )
         uniq_by_q = {qid: sorted(set(terms)) for qid, terms in sparse.items()}
 
-        def intersect_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-            deleted = deleted_bc.value if deleted_bc is not None else deleted_small
-            by_term = {t: decode_term(g)[0] for t, g in pdf.groupby("term")}
-            bucket = int(pdf["doc_bucket"].iloc[0])
-            outs = []
+        def intersect_batch(table: pa.Table) -> pa.Table:
+            deleted = deleted_array(deleted_small, deleted_bc)
+            by_term = {t: ids for t, (ids, _, _) in decode_blocks(table).items()}
+            qids, ids_out = [], []
             for qid, uniq in uniq_by_q.items():
                 per_term = [by_term[t] for t in uniq if t in by_term]
                 if len(per_term) < len(uniq):
@@ -521,17 +508,19 @@ def _pseudo_term_batch(
                     acc = np.intersect1d(acc, ids, assume_unique=True)
                     if acc.shape[0] == 0:
                         break
-                if deleted and acc.shape[0]:
-                    acc = acc[~np.isin(acc, np.fromiter(deleted, dtype=np.int64))]
+                acc = drop_deleted(acc, deleted)
                 if acc.shape[0]:
-                    outs.append(
-                        pd.DataFrame(
-                            {"query_id": qid, "doc_bucket": np.int32(bucket), "doc_id": acc}
-                        )
-                    )
-            if not outs:
-                return pd.DataFrame(columns=["query_id", "doc_bucket", "doc_id"])
-            return pd.concat(outs, ignore_index=True)
+                    qids.append(qid)
+                    ids_out.append(acc)
+            counts = [a.shape[0] for a in ids_out]
+            bucket = table.column("doc_bucket")[0].as_py()
+            return pa.table(
+                {
+                    "query_id": pa.array(np.repeat(np.array(qids, dtype=object), counts), pa.string()),
+                    "doc_bucket": pa.array(np.full(sum(counts), bucket, dtype=np.int32)),
+                    "doc_id": pa.array(np.concatenate(ids_out) if ids_out else [], pa.int64()),
+                }
+            )
 
         cands = reader.map_buckets(
             blocks, intersect_batch, "query_id string, doc_bucket int, doc_id long"

@@ -5,31 +5,40 @@ total order ``(score DESC, doc_id ASC)`` (SURVEY.md §7.5) — the
 reference engine's exact-search guarantee (its README.md:13,
 index.go:26).
 
-Scoring is block-at-a-time and vectorized: within one doc range every
-candidate block of a term is decoded once (delta+varint → numpy), the
-per-term contributions are added into a float64 array indexed by
-candidate position in ASCENDING TERM ORDER from a zero start — the
-oracle's summation order, so scores match it bit-for-bit — and the local
-top-k is taken with argpartition + lexsort.  The same kernel
-(:func:`clause_topk`) serves plain disjunctive BM25 (should-only specs)
-and boolean MUST / SHOULD / MUST_NOT retrieval.  Blocks are not skipped:
-the stored block metadata (``block_max_tf``, ``block_min_dl``,
-``block_max_raw``) stays in the index format for block-level pruning.
+Scoring is block-at-a-time and vectorized: a bucket's candidate blocks
+arrive as one Arrow table, and :func:`decode_blocks` decodes each payload
+column in ONE varint pass over its Arrow data buffer, then slices numpy
+views per term.  :func:`clause_topk` adds per-term contributions into a
+float64 array indexed by candidate position in ASCENDING TERM ORDER from a
+zero start — the oracle's summation order, so scores match it
+bit-for-bit — and takes the local top-k with argpartition + lexsort.  The
+same kernel serves plain disjunctive BM25 (should-only specs) and boolean
+MUST / SHOULD / MUST_NOT retrieval.  Blocks are not skipped: the stored
+block metadata (``block_max_tf``, ``block_min_dl``, ``block_max_raw``)
+stays in the index format for block-level pruning.
 
 Distribution model: postings are bucketed by doc range (``doc_bucket``), so
-one ``applyInPandas`` group = all query-term blocks for one doc range; each
+one ``applyInArrow`` group = all query-term blocks for one doc range, and
+bucket b runs on task b mod n (:meth:`IndexReader.map_buckets`); each
 group scores every query of the batch and emits its local top-k; the
 global top-k is the k best of (k × buckets) candidate rows — exact,
 because any global winner is a local winner in its bucket.  Query time thus
 shuffles only candidate *blocks* (pruned by term_bucket partition pruning +
 term predicate pushdown at the parquet scan), never raw postings rows.
+The dictionary lookup that precedes the scan runs on the driver with
+pyarrow over the reader's snapshot files — no Spark job.
 """
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+from pyarrow import fs as pafs
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -40,24 +49,87 @@ from ..oracle import idf as oracle_idf
 from ..sources.index_store import IndexStore
 
 
-def decode_term(group: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Concat-decode one term's blocks within a bucket group →
-    (doc_ids, tfs, dls), doc_ids sorted ascending.
+def _binary_values(column) -> np.ndarray:
+    """The value bytes of a binary / large_binary column (Array or
+    ChunkedArray), concatenated in row order, as a uint8 array — read off
+    each chunk's data buffer through its offsets buffer, honouring the
+    chunk's array offset.  No per-value Python."""
+    chunks = column.chunks if isinstance(column, pa.ChunkedArray) else [column]
+    parts = []
+    for arr in chunks:
+        if len(arr) == 0:
+            continue
+        if arr.null_count:
+            raise ValueError("posting block with a null payload")
+        _, offsets_buf, data_buf = arr.buffers()
+        off_t = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+        offsets = np.frombuffer(offsets_buf, dtype=off_t)[arr.offset : arr.offset + len(arr) + 1]
+        if data_buf is not None:
+            parts.append(np.frombuffer(data_buf, dtype=np.uint8)[offsets[0] : offsets[-1]])
+    return np.concatenate(parts) if parts else np.zeros(0, dtype=np.uint8)
 
-    Blocks ARE doc-ordered within a segment (indexer.finalize), but
-    applyInPandas group rows carry no order guarantee — the explicit
-    first_doc sort below is what makes the sorted-output invariant true."""
-    group = group.sort_values("first_doc")
-    ids, tfs, dls = [], [], []
-    for ids_b, tfs_b, dls_b, n, first in zip(
-        group["doc_ids_delta"], group["tfs"], group["dls"],
-        group["n_docs"], group["first_doc"],
-    ):
-        n = int(n)
-        ids.append(codec.decode_doc_ids(ids_b, int(first), n))
-        tfs.append(codec.decode_tfs(tfs_b, n))
-        dls.append(codec.decode_dls(dls_b, n))
-    return np.concatenate(ids), np.concatenate(tfs), np.concatenate(dls)
+
+def decode_blocks(table: pa.Table) -> dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]]:
+    """Decode a bucket's candidate blocks → {term: (doc_ids, tfs, dls)},
+    each int64 and doc_ids ascending.
+
+    Sorts the blocks once by (term, first_doc) — group rows carry no
+    order guarantee, and within a term the first_doc order is what makes
+    the concatenated doc_ids sorted.  Each payload column then decodes in
+    ONE :func:`codec.varint_decode` call over its Arrow data buffer, every
+    block being exactly ``n_docs`` values; doc_ids are rebuilt by a
+    cumsum segmented at block starts and seeded with ``first_doc``.  The
+    per-term arrays are views sliced at term boundaries.  Raises when a
+    column does not decode to exactly ``sum(n_docs)`` values (a truncated
+    or padded payload)."""
+    if table.num_rows == 0:
+        return {}
+    table = table.take(
+        pc.sort_indices(table, sort_keys=[("term", "ascending"), ("first_doc", "ascending")])
+    )
+    n_docs = table.column("n_docs").to_numpy().astype(np.int64)
+    total = int(n_docs.sum())
+
+    def values(name: str) -> np.ndarray:
+        out = codec.varint_decode(_binary_values(table.column(name))).view(np.int64)
+        if out.shape[0] != total:
+            raise ValueError(
+                f"{name}: decoded {out.shape[0]} values, blocks declare {total}"
+            )
+        return out
+
+    deltas, tfs, dls = values("doc_ids_delta"), values("tfs"), values("dls")
+    starts = np.cumsum(n_docs) - n_docs
+    csum = np.cumsum(deltas)
+    # doc = first_doc + (running delta sum since the block start); int64
+    # wrap-around cancels in the subtraction
+    seed = csum[starts] - deltas[starts] - table.column("first_doc").to_numpy()
+    doc_ids = csum - np.repeat(seed, n_docs)
+    terms = table.column("term").to_numpy(zero_copy_only=False)
+    term_first = np.flatnonzero(np.concatenate(([True], terms[1:] != terms[:-1])))
+    bounds = np.concatenate((starts[term_first], [total]))
+    return {
+        terms[b]: (doc_ids[lo:hi], tfs[lo:hi], dls[lo:hi])
+        for b, lo, hi in zip(term_first, bounds[:-1], bounds[1:])
+    }
+
+
+def deleted_array(deleted_small, deleted_bc) -> np.ndarray | None:
+    """The tombstone set of a :func:`tombstones_ref` pair as ONE sorted
+    int64 array (None when empty) — built once per bucket group and passed
+    to every spec of the group."""
+    deleted = deleted_bc.value if deleted_bc is not None else deleted_small
+    if not deleted:
+        return None
+    return np.sort(np.fromiter(deleted, dtype=np.int64, count=len(deleted)))
+
+
+def drop_deleted(ids: np.ndarray, deleted: np.ndarray | None) -> np.ndarray:
+    """``ids`` minus the sorted tombstone array (binary search, no set)."""
+    if deleted is None or ids.shape[0] == 0:
+        return ids
+    pos = np.minimum(np.searchsorted(deleted, ids), deleted.shape[0] - 1)
+    return ids[deleted[pos] != ids]
 
 
 def clause_topk(
@@ -68,7 +140,7 @@ def clause_topk(
     idf: dict[str, float],
     avgdl: float,
     k: int,
-    deleted: frozenset | None,
+    deleted: np.ndarray | None,
 ) -> tuple[np.ndarray, np.ndarray] | None:
     """Exact local top-k of ONE query spec over one bucket's decoded terms
     (``by_term``: term → (doc_ids, tfs, dls), each sorted unique by
@@ -77,7 +149,8 @@ def clause_topk(
 
     Candidates: the intersection of the ``must`` posting lists, or — with
     no must term — the union of the ``should`` lists; minus every
-    ``must_not`` posting and every tombstoned doc.  Score: BM25 over the
+    ``must_not`` posting and every tombstoned doc (``deleted``: sorted
+    int64, see :func:`deleted_array`).  Score: BM25 over the
     distinct (must ∪ should) terms a candidate contains, summed in
     ascending term order.  A plain BM25 query is the should-only spec."""
     if must:
@@ -99,8 +172,7 @@ def clause_topk(
         excl = [by_term[t][0] for t in must_not if t in by_term]
         if excl:
             cand = cand[~np.isin(cand, np.concatenate(excl), assume_unique=False)]
-    if deleted and cand.shape[0]:
-        cand = cand[~np.isin(cand, np.fromiter(deleted, dtype=np.int64))]
+    cand = drop_deleted(cand, deleted)
     if cand.shape[0] == 0:
         return None
     # BM25 over scoring terms, ascending term order, accumulated by
@@ -218,6 +290,30 @@ def tombstones_ref(reader) -> tuple[frozenset | None, object | None]:
 
 _RANKED_SCHEMA = "query_id string, rank int, doc_id bigint, score double"
 
+#: block columns a bucket group needs (the block-max metadata stays behind)
+_KERNEL_COLUMNS = ("term", "doc_bucket", "first_doc", "n_docs", "doc_ids_delta", "tfs", "dls")
+
+#: the ``term_bucket=K`` directory of a dictionary file path
+_TERM_BUCKET_DIR = re.compile(r"/term_bucket=(\d+)/[^/]*$")
+
+
+def _in_predicate(column: str, values) -> Column:
+    """``column IN (v, ...)`` over the distinct ``values`` as ONE SQL
+    expression — one Py4J call however many values, where
+    ``Column.isin`` makes a literal Column per value.  Strings are
+    single-quoted with ``\\`` and ``'`` backslash-escaped (Spark's
+    string-literal syntax), so any term is a literal, never SQL."""
+    vals = sorted(set(values))
+    if not vals:
+        return F.lit(False)
+
+    def literal(v) -> str:
+        if isinstance(v, str):
+            return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        return str(int(v))
+
+    return F.expr(f"`{column}` IN ({', '.join(map(literal, vals))})")
+
 
 def _topk_plan(
     reader,
@@ -228,10 +324,11 @@ def _topk_plan(
     """The one scoring plan: ``specs`` = {query_id: (must, should,
     must_not)} analyzed terms → (query_id, rank, doc_id, score).
 
-    dictionary (one lookup for the batch's unseen terms) → partition-
-    pruned, term-pushed candidate block scan over every spec's live terms
-    → ONE ``doc_bucket`` exchange whose groups decode each term once and
-    run :func:`clause_topk` for every spec → hierarchical exact top-k
+    driver-side dictionary lookup (the batch's unseen terms, no Spark
+    job) → partition-pruned, term-pushed candidate block scan over every
+    spec's live terms → ONE ``doc_bucket`` exchange whose Arrow groups
+    decode each column once (:func:`decode_blocks`) and run
+    :func:`clause_topk` for every spec → hierarchical exact top-k
     (:func:`ranked_topk`).  An OOV must term, or no live (must ∪ should)
     term, yields 0 rows for that query only; OOV should / must_not terms
     drop out of their clause.  ``boosts`` scale a term's idf."""
@@ -260,23 +357,26 @@ def _topk_plan(
     # broadcast per snapshot — identical results either way
     deleted_small, deleted_bc = tombstones_ref(reader)
 
-    def score_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        deleted = deleted_bc.value if deleted_bc is not None else deleted_small
+    def score_bucket(table: pa.Table) -> pa.Table:
+        deleted = deleted_array(deleted_small, deleted_bc)
         # each term decodes ONCE per bucket for the whole batch (head terms
         # typically appear in many queries of a batch)
-        by_term = {t: decode_term(g) for t, g in pdf.groupby("term")}
-        outs = []
+        by_term = decode_blocks(table)
+        qids, ids, scores = [], [], []
         for qid, (must, should, must_not) in live_specs.items():
             got = clause_topk(by_term, must, should, must_not, idf, avgdl, k, deleted)
-            if got is None:
-                continue
-            ids, scores = got
-            out = pd.DataFrame({"doc_id": ids, "score": scores})
-            out.insert(0, "query_id", qid)
-            outs.append(out)
-        if not outs:
-            return pd.DataFrame(columns=["query_id", "doc_id", "score"])
-        return pd.concat(outs, ignore_index=True)
+            if got is not None:
+                qids.append(qid)
+                ids.append(got[0])
+                scores.append(got[1])
+        counts = [a.shape[0] for a in ids]
+        return pa.table(
+            {
+                "query_id": pa.array(np.repeat(np.array(qids, dtype=object), counts), pa.string()),
+                "doc_id": pa.array(np.concatenate(ids) if ids else [], pa.int64()),
+                "score": pa.array(np.concatenate(scores) if scores else [], pa.float64()),
+            }
+        )
 
     local = reader.map_buckets(blocks, score_bucket, RESULT_SCHEMA)
     return ranked_topk(local, k, reader.n_buckets)
@@ -310,9 +410,22 @@ class IndexReader:
         """Re-open the store's CURRENT snapshot: re-reads stats, dictionary
         and the postings file listing (new stream segments / compacted
         layouts become visible) and drops the term cache (idf depends on
-        the snapshot's N/df).  Cheap — three metadata reads, no data."""
+        the snapshot's N/df).  Cheap — three metadata reads, no data.
+
+        The dictionary's files are captured per ``term_bucket`` from the
+        listing Spark makes here (``_dict_df.inputFiles()``): the
+        driver-side lookup (:meth:`_dictionary_rows`) reads only those, so
+        it answers from THIS snapshot and never lists the directory again.
+        ``_dict_df`` itself stays for prefix/fuzzy ``startswith`` scans."""
         self.stats = self.store.stats()
         self._dict_df = self.spark.read.parquet(self.store.dictionary_path)
+        self._dict_fs, self._dict_base = None, None
+        self._dict_files: dict[int, list[str]] = {}
+        for uri in self._dict_df.inputFiles():
+            self._dict_fs, path = pafs.FileSystem.from_uri(uri)
+            m = _TERM_BUCKET_DIR.search(path)
+            self._dict_base = path[: m.start()]
+            self._dict_files.setdefault(int(m.group(1)), []).append(path)
         self._posts_df = self.store.load_postings_df(self.spark)
         # tombstoned doc_ids: excluded from every result (logical delete);
         # scores keep the physical index's stats until a compaction purges
@@ -369,32 +482,44 @@ class IndexReader:
         return None if self._gone_df is False else self._gone_df
 
     def _dictionary_rows(self, terms: list[str]) -> dict[str, tuple[float, int]]:
-        """term → (idf, term_bucket).  ONE Spark job for the batch's UNSEEN
-        terms only; terms repeat heavily across a serving session's
-        queries — Zipf again — so steady-state batches often skip the
-        lookup job entirely.
+        """term → (idf, term_bucket).  The batch's UNSEEN terms only are
+        looked up, on the driver with pyarrow — no Spark job; terms repeat
+        heavily across a serving session's queries — Zipf again — so
+        steady-state batches often skip the lookup entirely.
 
-        The lookup scan is PARTITION-PRUNED: the dictionary is laid out by
+        The lookup is PARTITION-PRUNED: the dictionary is laid out by
         term_bucket (indexer.finalize) and the query's buckets are derived
-        driver-side with the spec-tested pure-Python xxhash64 twin — at
-        10^12-doc scale the dictionary is billions of terms, and this turns
-        the lookup from a vocabulary scan into ≤|terms| partition reads.
+        driver-side with the spec-tested pure-Python xxhash64 twin, so only
+        those buckets' files of the reader's snapshot are opened, with a
+        ``term`` filter (the files are term-sorted, so row-group stats
+        prune) — at 10^12-doc scale the dictionary is billions of terms.
         Stored-vs-derived bucket equality is asserted on every fetched row
         (a hash-spec drift fails loudly instead of silently missing terms).
+        A snapshot file that has since been deleted raises — it is never
+        read as "term absent".
         """
         from ..functions.hashing import term_bucket_py
 
         missing = [t for t in terms if t not in self._term_cache]
         if missing:
             py_buckets = {t: term_bucket_py(t, self.term_buckets) for t in missing}
-            rows = (
-                self._dict_df.filter(
-                    F.col("term_bucket").isin(sorted(set(py_buckets.values())))
-                    & F.col("term").isin(missing)
+            paths = [
+                p for b in sorted(set(py_buckets.values())) for p in self._dict_files.get(b, ())
+            ]
+            rows = []
+            if paths:
+                # hive partitioning: each row carries its file's stored bucket
+                dictionary = ds.dataset(
+                    paths,
+                    filesystem=self._dict_fs,
+                    format="parquet",
+                    partitioning="hive",
+                    partition_base_dir=self._dict_base,
                 )
-                .select("term", "df", "term_bucket")
-                .collect()
-            )
+                rows = dictionary.to_table(
+                    columns=["term", "df", "term_bucket"],
+                    filter=pc.is_in(pc.field("term"), value_set=pa.array(missing, pa.string())),
+                ).to_pylist()
             for r in rows:
                 if int(r["term_bucket"]) != py_buckets[r["term"]]:
                     raise RuntimeError(
@@ -430,12 +555,12 @@ class IndexReader:
         """Scan only the term_bucket partitions + terms of the query:
         partition pruning on the directory column, then predicate pushdown
         on ``term`` into the parquet row groups.  ``buckets=None`` skips the
-        partition prune (term predicate still pushes down)."""
-        posts = self._posts_df
-        pred = F.col("term").isin(terms)
+        partition prune (term predicate still pushes down).  Each predicate
+        is ONE SQL ``IN`` expression (:func:`_in_predicate`)."""
+        pred = _in_predicate("term", terms)
         if buckets is not None:
-            pred = F.col("term_bucket").isin(sorted(set(buckets))) & pred
-        return posts.filter(pred)
+            pred = _in_predicate("term_bucket", buckets) & pred
+        return self._posts_df.filter(pred)
 
     @property
     def n_buckets(self) -> int:
@@ -443,20 +568,25 @@ class IndexReader:
         return -(-int(self.stats["n_docs"]) // int(self.stats["doc_bucket_size"]))
 
     def map_buckets(self, blocks: DataFrame, fn, schema) -> DataFrame:
-        """``applyInPandas(fn, schema)`` over ``blocks`` grouped by
-        ``doc_bucket``, behind ONE exchange.
+        """``applyInArrow(fn, schema)`` over ``blocks`` grouped by
+        ``doc_bucket``, behind ONE exchange: ``fn`` gets one bucket's
+        candidate blocks as a ``pyarrow.Table`` (the columns
+        :func:`decode_blocks` reads) and returns a ``pyarrow.Table``.
 
-        Explicit partition count: per-bucket work is Python-per-posting,
-        not bytes — AQE's byte-based coalescing would serialize it onto
-        one task at small scale, while over-partitioning pays a Python
-        worker round trip per EMPTY task.  Group count = doc buckets.
-        The hash layout matches the grouping key, so groupBy adds no
-        second exchange."""
+        Direct placement: ``repartitionById`` sends bucket b to task
+        b mod n, so buckets spread evenly over the tasks (hashing put 3 of
+        4 buckets on one task), and the grouping key is the placement key,
+        so groupBy adds no second exchange.  Explicit partition count:
+        per-bucket work is Python-per-posting, not bytes — AQE's byte-based
+        coalescing would serialize it onto one task at small scale, while
+        over-partitioning pays a Python worker round trip per EMPTY task.
+        Task count = min(doc buckets, default parallelism)."""
         n = max(1, min(self.spark.sparkContext.defaultParallelism, self.n_buckets))
         return (
-            blocks.repartition(n, "doc_bucket")
+            blocks.select(*_KERNEL_COLUMNS)
+            .repartitionById(n, "doc_bucket")
             .groupBy("doc_bucket")
-            .applyInPandas(fn, schema=schema)
+            .applyInArrow(fn, schema=schema)
         )
 
     def batch_search(

@@ -1,4 +1,4 @@
-"""The per-bucket BM25 kernel (wand.decode_term + wand.clause_topk) against
+"""The per-bucket BM25 kernel (wand.decode_blocks + wand.clause_topk) against
 a naive reference — the engine's analogue of the reference engine's
 SIMD-vs-scalar kernel equivalence tests (its
 internal/cosine/simd/simd_test.go:52-74).
@@ -14,10 +14,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from search_spark import codec
-from search_spark.operators.wand import clause_topk, decode_term
+from search_spark.operators.wand import clause_topk, decode_blocks
 from search_spark.oracle import term_score
 
 AVGDL = 20.0
@@ -35,8 +36,12 @@ def naive_topk(postings, qidf, avgdl, k):
 
 def kernel_topk(blocks, qidf, avgdl, k):
     """blocks: term → encoded block DataFrame → the kernel's should-only
-    top-k as [(doc_id, score)]."""
-    by_term = {t: decode_term(g) for t, g in blocks.items()}
+    top-k as [(doc_id, score)], decoded as one bucket group's Arrow table."""
+    table = pa.Table.from_pandas(
+        pd.concat([b.assign(term=t) for t, b in blocks.items()], ignore_index=True),
+        preserve_index=False,
+    )
+    by_term = decode_blocks(table)
     got = clause_topk(by_term, [], sorted(blocks), [], qidf, avgdl, k, None)
     if got is None:
         return []

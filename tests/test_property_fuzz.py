@@ -13,13 +13,14 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from search_spark import codec
 from search_spark.analyzer import tokenize, tokenize_pandas
 from search_spark.functions.hashing import P31, h32_py, minhash_perm_py, rolling_fp_py
-from search_spark.operators.wand import clause_topk, decode_term
+from search_spark.operators.wand import clause_topk, decode_blocks
 from search_spark.oracle import term_score
 
 text_st = st.text(max_size=300)
@@ -37,8 +38,13 @@ def _naive_topk(postings, qidf, avgdl, k):
 
 
 def _kernel_topk(blocks, qidf, avgdl, k):
-    """The per-bucket kernel's should-only top-k over term → block frame."""
-    by_term = {t: decode_term(g) for t, g in blocks.items()}
+    """The per-bucket kernel's should-only top-k over term → block frame,
+    decoded as one bucket group's Arrow table."""
+    table = pa.Table.from_pandas(
+        pd.concat([g.assign(term=t) for t, g in blocks.items()], ignore_index=True),
+        preserve_index=False,
+    )
+    by_term = decode_blocks(table)
     got = clause_topk(by_term, [], sorted(blocks), [], qidf, avgdl, k, None)
     return [] if got is None else [(int(d), float(s)) for d, s in zip(*got)]
 
