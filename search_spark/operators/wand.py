@@ -288,7 +288,10 @@ def tombstones_ref(reader) -> tuple[frozenset | None, object | None]:
     return (getattr(reader, "deleted", frozenset()) or None), None
 
 
-_RANKED_SCHEMA = "query_id string, rank int, doc_id bigint, score double"
+#: the plan's result columns: (query_id, rank, doc_id, score)
+_RANKED_SCHEMA = pa.schema(
+    [("query_id", pa.string()), ("rank", pa.int32()), ("doc_id", pa.int64()), ("score", pa.float64())]
+)
 
 #: block columns a bucket group needs (the block-max metadata stays behind)
 _KERNEL_COLUMNS = ("term", "doc_bucket", "first_doc", "n_docs", "doc_ids_delta", "tfs", "dls")
@@ -334,7 +337,10 @@ def _topk_plan(
     drop out of their clause.  ``boosts`` scale a term's idf."""
     specs = {qid: spec for qid, spec in specs.items() if spec[0] or spec[1]}
     if k <= 0 or not specs:
-        return reader.spark.createDataFrame([], _RANKED_SCHEMA)
+        # an empty Arrow table is a LocalRelation: collecting it runs no
+        # Spark job, where ``createDataFrame([], ddl)`` builds a Python RDD
+        # whose collect runs ``defaultParallelism`` Python tasks
+        return reader.spark.createDataFrame(_RANKED_SCHEMA.empty_table())
     all_terms = sorted({t for spec in specs.values() for part in spec for t in part})
     dict_rows = reader._dictionary_rows(all_terms)
     live_specs: dict[str, tuple[list[str], list[str], list[str]]] = {}
@@ -347,7 +353,7 @@ def _topk_plan(
                 must, should_live, [t for t in must_not if t in dict_rows]
             )
     if not live_specs:
-        return reader.spark.createDataFrame([], _RANKED_SCHEMA)
+        return reader.spark.createDataFrame(_RANKED_SCHEMA.empty_table())
     live = sorted({t for spec in live_specs.values() for part in spec for t in part})
     blocks = reader.candidate_blocks(live, [dict_rows[t][1] for t in live])
     boosts = boosts or {}
@@ -578,8 +584,12 @@ class IndexReader:
         4 buckets on one task), and the grouping key is the placement key,
         so groupBy adds no second exchange.  Explicit partition count:
         per-bucket work is Python-per-posting, not bytes — AQE's byte-based
-        coalescing would serialize it onto one task at small scale, while
-        over-partitioning pays a Python worker round trip per EMPTY task.
+        coalescing would serialize it onto one task at small scale.  An
+        empty partition starts no Python task; each non-empty one pays a
+        Python worker round trip (task set-up, UDF unpickling, the Arrow
+        stream): a trivial 4-group ``applyInArrow`` job takes about 130 ms
+        on a 4-core host, against about 340 ms while every task re-parsed
+        pyspark.zip's directory (``search_spark._stamp_zip_invalidation``).
         Task count = min(doc buckets, default parallelism)."""
         n = max(1, min(self.spark.sparkContext.defaultParallelism, self.n_buckets))
         return (
@@ -628,9 +638,7 @@ class IndexReader:
         pages of the same snapshot).  Cost grows with the page depth,
         which is the honest cost model of deep paging on any engine."""
         if offset < 0 or size <= 0:
-            return self.spark.createDataFrame(
-                [], "rank int, doc_id bigint, score double"
-            )
+            return self.spark.createDataFrame(_RANKED_SCHEMA.remove(0).empty_table())
         return (
             self.batch_search([("q", query_text)], offset + size)
             .drop("query_id")

@@ -254,3 +254,27 @@ def test_dictionary_miss_after_files_removed_raises(spark, tmp_path_factory):
         reader._dictionary_rows(["the"])
     with pytest.raises(OSError):
         reader.batch_search([("q", "the needle0")], 5).collect()
+
+
+def test_empty_results_run_no_spark_job(spark, built):
+    """An all-OOV batch, ``k=0`` and an invalid page answer from a local
+    relation with the result schema: 0 rows and no Spark job."""
+    reader = IndexReader(spark, built)
+    sc = spark.sparkContext
+    ranked = "struct<query_id:string,rank:int,doc_id:bigint,score:double>"
+    page = "struct<rank:int,doc_id:bigint,score:double>"
+    cases = {
+        "all_oov": (lambda: reader.batch_search([("a", "zzq_oov"), ("b", "zzq_oov2")], 5), ranked),
+        "k_zero": (lambda: reader.batch_search([("a", "the needle0")], 0), ranked),
+        "page_size_zero": (lambda: reader.search_page("the needle0", 0, 0), page),
+        "page_offset_negative": (lambda: reader.search_page("the needle0", -1, 5), page),
+    }
+    for group, (run, schema) in cases.items():
+        sc.setJobGroup(f"empty-{group}", group)
+        try:
+            df = run()
+            assert df.collect() == [], group
+            assert df.schema.simpleString() == schema, group
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup(f"empty-{group}") == [], group
